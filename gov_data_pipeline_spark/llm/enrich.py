@@ -2,10 +2,16 @@
 (SURVEY L2-L4 — reference ``utils/gpt.py:180-462`` ``process_table``).
 
 The reference's per-row Python loop becomes: native column predicates
-decide *which* rows need model calls, ``llm_map`` runs the calls
-batched-async on executors, native expressions splice results back.
-Excluded rows never reach the model — the same short-circuit the
-reference does row-by-row (``gpt.py:399-406``), expressed as a filter.
+decide *which* rows need model calls (a ``__need_*`` flag per stage),
+``llm_map`` runs the calls batched-async on executors, native
+expressions splice results back. Excluded rows never reach the model —
+the same short-circuit the reference does row-by-row
+(``gpt.py:399-406``): their request builder returns ``None``.
+
+The plan is linear: source → OCR ``mapInPandas`` → brand
+``mapInPandas`` → correction ``mapInPandas``. Every row passes through
+each stage once, so the row count is preserved and each gated row sends
+one request per stage, whether or not the model is deterministic.
 """
 
 from __future__ import annotations
@@ -99,7 +105,7 @@ def ocr_enrich(
             return None
         return _ocr_request(row[image_col])
 
-    out = llm_map(flagged, build, "__ocr_text", client_factory, gate=F.col("__need_ocr"))
+    out = llm_map(flagged, build, "__ocr_text", client_factory)
     return out.withColumn(
         brand_col,
         F.when(
@@ -154,7 +160,7 @@ def brand_variants(
             response_format="json_object",
         )
 
-    out = llm_map(flagged, build, "__brand_json", client_factory, gate=F.col("__need_brand"))
+    out = llm_map(flagged, build, "__brand_json", client_factory)
     parsed = F.from_json(
         F.col("__brand_json"),
         "english_samples array<string>, russian_samples array<string>",
@@ -204,7 +210,7 @@ def correct_rows(
             response_format="json_object",
         )
 
-    out = llm_map(flagged, build, "__corr_json", client_factory, gate=F.col("__need_corr"))
+    out = llm_map(flagged, build, "__corr_json", client_factory)
     corrected = F.from_json(F.col("__corr_json"), "corrected_row map<string,string>")[
         "corrected_row"
     ]

@@ -13,9 +13,13 @@ same work runs as:
 - R25 retry/backoff per request inside the batch (a failed request
   retries alone; the partition is never replayed);
 - rows whose request builder returns ``None`` are skipped for free
-  (the gating predicates — exclusion, empty-brand — are evaluated as
-  native columns *before* the UDF, so excluded rows never cross the
-  Arrow boundary at all when ``prefilter`` is used).
+  (no network call, no retry budget). Callers gate a stage by
+  evaluating its predicate as a native column the builder reads.
+
+Invariant: ``llm_map`` adds exactly one ``mapInPandas`` node on top of
+its input — one linear plan, so the upstream lineage is evaluated once
+and each gated row sends one request per stage (plus its retries),
+whether or not the model is deterministic.
 """
 
 from __future__ import annotations
@@ -25,7 +29,7 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from gov_data_pipeline_spark.llm.client import (
     LLMRequest,
@@ -59,7 +63,6 @@ def _run_batch(
     concurrency: int,
     max_retries: int,
     initial_delay: float,
-    nonfatal_errors: tuple[type[Exception], ...] = NONFATAL_ERRORS,
 ) -> list[str | None]:
     async def run() -> list[str | None]:
         sem = asyncio.Semaphore(concurrency)
@@ -88,7 +91,7 @@ def _run_batch(
         # still fail loudly, not ship as silent nulls.
         out: list[str | None] = []
         for r in results:
-            if isinstance(r, nonfatal_errors):
+            if isinstance(r, NONFATAL_ERRORS):
                 out.append(None)
             elif isinstance(r, BaseException):
                 raise r
@@ -107,40 +110,18 @@ def llm_map(
     concurrency: int = 8,
     max_retries: int = 5,
     initial_delay: float = 2.0,
-    gate: "F.Column | None" = None,
-    nonfatal_errors: tuple[type[Exception], ...] = NONFATAL_ERRORS,
 ) -> DataFrame:
     """Append ``output_col`` (string) = model completion per row.
 
     ``build_request`` maps a row dict to an ``LLMRequest`` (or ``None``
-    to skip). ``client_factory`` is constructed once per partition on
-    the executor (connection reuse across the batch); it must be
-    picklable.
+    to skip the row: no request, null ``output_col``).
+    ``client_factory`` is constructed once per partition on the
+    executor (connection reuse across the batch); it must be picklable.
 
-    ``gate`` (native boolean Column): rows failing it bypass the Python
-    worker entirely — they get a null ``output_col`` via a filtered
-    union, never crossing the Arrow boundary. With sparse gates (the
-    usual case: only a fraction of rows need the model) this removes
-    most of the UDF serialization cost; ``build_request`` returning
-    ``None`` remains the row-level skip inside gated batches.
+    Every input row passes through the one ``mapInPandas`` exactly
+    once, so row count and row identity are preserved and each row's
+    request is sent once per evaluation of the result.
     """
-    if gate is not None:
-        need = df.filter(gate)
-        skip = df.filter(~F.coalesce(gate, F.lit(False))).withColumn(
-            output_col, F.lit(None).cast("string")
-        )
-        mapped = llm_map(
-            need,
-            build_request,
-            output_col,
-            client_factory,
-            concurrency,
-            max_retries,
-            initial_delay,
-            gate=None,
-            nonfatal_errors=nonfatal_errors,
-        )
-        return mapped.unionByName(skip)
     # mapInPandas cannot resolve column names containing dots (registry
     # columns like "Рег. №" do), so the UDF boundary runs under
     # positional placeholder names; the mapper sees the real names.
@@ -166,7 +147,6 @@ def llm_map(
                 concurrency,
                 max_retries,
                 initial_delay,
-                nonfatal_errors,
             )
             out = pdf.assign(__out=pd.Series(results, index=pdf.index, dtype="object"))
             out.columns = safe + ["__out"]

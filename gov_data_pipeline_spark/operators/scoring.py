@@ -430,8 +430,8 @@ def class_count_model(
     reuse turned out to be FRAGILE in practice — the r13 plan audit
     found the q198 build+score job running the corpus explode twice
     anyway (the two subtrees stop being identical once the small
-    model side broadcasts; plans/r13/q198_multiclass_route_after.txt
-    as of the argmax change still shows 2 Generates / 8 scans) — so a
+    model side broadcasts; as of the argmax change its plan still
+    showed 2 Generates / 8 scans) — so a
     build-then-route pipeline should build the feature frame once,
     pin it (localCheckpoint), and pass it to BOTH this and
     ``score_multiclass_model``; that makes the one-explode property

@@ -19,7 +19,10 @@ value-hash oracles; ``tests/test_registry.py`` pins total coverage.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,272 +45,39 @@ _MODULES = (
     stream_queries, quality, corpus_ops, events_analytics, stats_ml,
 )
 
-# Queries whose IMPLEMENTATION was restructured in an optimization
-# round AFTER their latest driver-green correctness row: a green row
-# from before the restructure verified a plan that no longer exists,
-# so for rotation purposes these count as stalest of all (the r13
-# verdict's item 1b — the rotation must put the restructured-but-
-# unsampled queries in front of the driver's oracle before anything
-# else rotates in).  ``derive_priority.py`` and the rotation tripwire
-# (tests/test_registry.py::test_priority_rotation_is_fresh) both key
-# off this list; REMOVE a name once a post-restructure driver round
-# records it hash-green, and ADD every query a future optimization
-# round restructures.
-#
-# r13 restructures lacking a post-change driver row (VERDICT.md
-# "Residual risk"), plus the BPE-memo kernel family (q149/q153/q195/
-# q199 share q193's memoized merge loop) and q42 (runs under the r13
-# session-wide SHJ config and r14's narrowed profile projection).
-# r14 restructures: the fused two-pass cjk canonical
-# (transforms/text.py) touches q191/q192/q198; the narrowed
-# minhash_doc_profile projection (operators/dedup.py) touches
-# q42/q75/q187; the chained-strip script counts
-# (functions/textstats.py script_counts_chained) touch q170/q173/q198:
-VERIFICATION_DEBT: tuple[str, ...] = (
-    "q09_group_concat",
-    "q170_script_profile",
-    "q173_multilingual_curation",
-    "q42_minhash_lsh",
-    "q75_corpus_pipeline",
-    "q187_minhash_calibration",
-    "q191_cjk_normalized_dedup",
-    "q192_quality_linear_cjk",
-    "q87_decontaminate",
-    "q144_duplicate_passages",
-    "q149_doc_pack_nfd",
-    "q153_token_budget_pack",
-    "q154_decontaminate_bloom",
-    "q155_sparse_cosine_topk",
-    "q168_quality_trained",
-    "q171_bigram_logprob",
-    "q175_phrase_merges",
-    "q176_passage_removal",
-    "q185_bpe_encode",
-    "q190_ann_multiprobe_recall",
-    "q193_bpe_ranks_count",
-    "q195_bpe_budget_pack",
-    "q198_multiclass_route",
-    "q199_pack_manifest",
-)
-
 # The driver's per-round correctness run samples the FIRST 50 entries of
-# ``queries()`` (insertion order).  Invariant for this tuple: queries
-# carrying VERIFICATION_DEBT and queries with no driver-green row yet
-# enumerate first, then greens from stalest round to freshest; ties
-# across the sample boundary are allowed.  Re-derive with
-# ``python scripts/derive_priority.py`` at the start of EVERY round
-# (after a new CORRECTNESS file lands) and after registering new queries
-# — never trust last round's order.  Tripwire:
-# tests/test_registry.py::test_priority_rotation_is_fresh.
-# Re-derived after the r12 records landed (r13): the 45-query r09
-# cohort leads, the sample boundary falls inside the r10 cohort (tie,
-# allowed), then r11/r12 cohorts.  New r13 registrations (q200+) are
-# never-sampled and therefore enumerate first.
-_PRIORITY: tuple[str, ...] = (
-    # never sampled (no driver row)
-    "q09_group_concat",
-    "q144_duplicate_passages",
-    "q149_doc_pack_nfd",
-    "q153_token_budget_pack",
-    "q154_decontaminate_bloom",
-    "q155_sparse_cosine_topk",
-    "q168_quality_trained",
-    "q170_script_profile",
-    "q171_bigram_logprob",
-    "q173_multilingual_curation",
-    "q175_phrase_merges",
-    "q176_passage_removal",
-    "q185_bpe_encode",
-    "q187_minhash_calibration",
-    "q190_ann_multiprobe_recall",
-    "q191_cjk_normalized_dedup",
-    "q192_quality_linear_cjk",
-    "q193_bpe_ranks_count",
-    "q195_bpe_budget_pack",
-    "q198_multiclass_route",
-    "q199_pack_manifest",
-    "q42_minhash_lsh",
-    "q75_corpus_pipeline",
-    "q87_decontaminate",
-    # latest green r10
-    "q07_rollup",
-    "q08_cube",
-    "q10_window_rank",
-    "q115_weighted_sample",
-    "q116_mad_outliers",
-    "q120_token_entropy",
-    "q122_k_anonymity",
-    "q128_expectations",
-    "q12_running_sum",
-    "q137_pagerank_mass",
-    "q138_semantic_decontaminate",
-    "q139_char_budget_mix",
-    "q167_quality_linear_unicode",
-    "q169_unicode_normalized_dedup",
-    "q172_top_ngram_fraction",
-    "q174_temperature_quota",
-    "q177_dsir_select",
-    "q178_boilerplate_lines",
-    "q179_pr_curve",
-    "q180_lm_buckets",
-    "q181_semdedup",
-    "q182_contamination_fraction",
-    "q183_dup_lines",
-    "q184_mixture_materialize",
-    "q186_ann_recall",
-    "q188_ivf_recall",
-    "q189_margin_mining",
-    "q46_cosine_neardup",
-    "q47_text_stats",
-    "q48_lang_id",
-    "q49_fingerprint",
-    "q57_winnowing",
-    "q67_dedup_clusters",
-    "q68_bm25",
-    "q69_stratified_sample",
-    "q70_frequent_terms",
-    "q74_semantic_clusters",
-    "q77_fuzzy_join",
-    # latest green r11
-    "q06_asof_join",
-    "q100_source_cap_sample",
-    "q101_source_quality_gate",
-    "q102_funnel",
-    "q103_retention",
-    "q104_embed_topk",
-    "q105_corpus_diff",
-    "q106_unpivot",
-    "q107_negative_sampling",
-    "q140_semantic_decontaminate_lsh",
-    "q141_jpeg_dims",
-    "q142_source_overlap",
-    "q143_distinctive_terms",
-    "q145_cluster_split",
-    "q146_epoch_mixture",
-    "q147_data_card",
-    "q148_event_throttle",
-    "q14_topk_orders",
-    "q150_stream_throttle",
-    "q15_intersect",
-    "q16_except",
-    "q18_row_index",
-    "q194_pii_scrub",
-    "q19_count_distinct",
-    "q25_header_promotion",
-    "q28_redact",
-    "q30_string_funcs",
-    "q31_regex",
-    "q32_dates",
-    "q43_simhash",
-    "q45_ann_lsh",
-    "q50_llm_enrich",
-    "q51_llm_correction",
-    "q52_multimodal",
-    "q55_ann_ivf",
-    "q56_cosine_neardup_gemm",
-    "q58_overlap_pairs",
-    "q59_incremental_dedup",
-    "q65_hash_sample",
-    "q72_upsert_latest",
-    "q73_salted_join",
-    "q78_grouping_sets",
-    # latest green r12
-    "q01_pricing_summary",
-    "q02_revenue_by_nation",
-    "q03_semi_join",
-    "q108_time_weighted_avg",
-    "q109_session_paths",
-    "q110_value_histogram",
-    "q111_grouped_percentiles",
-    "q112_correlation",
-    "q113_kmeans",
-    "q114_psi_drift",
-    "q117_ohlc_bars",
-    "q11_window_lag",
-    "q13_sessionize",
-    "q151_compact_roundtrip",
-    "q152_jsonl_roundtrip",
-    "q156_interval_overlap",
-    "q157_capped_sessions",
-    "q158_containment_pairs",
-    "q159_normalized_dedup",
-    "q160_asof_nearest",
-    "q161_token_bucket",
-    "q17_pivot",
-    "q196_shuffled_export",
-    "q197_ivf_probe_sweep",
-    "q27_sql_api",
-    "q29_salted_agg",
-    "q34_json",
-    "q36_map",
-    "q60_tumbling",
-    "q61_sliding",
-    "q62_session_window",
-    "q63_stream_dedup",
-    "q64_gapfill",
-    "q66_cumulative_alerts",
-    "q71_range_window",
-    "q76_stream_join",
-    "q79_ntile",
-    "q80_semantic_clusters_lsh",
-    "q81_xlsx_image_extract",
-    "q82_docx_ingest",
-    "q83_row_index_ingest",
-    "q84_frame_sample",
-    "q85_chunk_documents",
-    "q86_sequence_pack",
-    # latest green r13
-    "q04_anti_join",
-    "q05_band_join",
-    "q118_embed_quantize",
-    "q119_trend_regression",
-    "q121_zipf_slope",
-    "q123_markov_transitions",
-    "q124_ab_welch",
-    "q125_heavy_hitters",
-    "q126_hourly_percentile_bands",
-    "q127_time_to_convert",
-    "q129_html_extract",
-    "q130_url_normalize",
-    "q131_pagerank",
-    "q132_sitemap_extract",
-    "q133_robots_gate",
-    "q134_image_dims",
-    "q135_media_meta",
-    "q136_parquet_roundtrip",
-    "q162_excel_roundtrip",
-    "q163_containment_dedup",
-    "q164_quality_linear",
-    "q165_eval_sample",
-    "q166_column_profile",
-    "q200_passage_miss_rate",
-    "q201_corpus_vacuum",
-    "q202_int8_recall",
-    "q20_clean_text",
-    "q21_reg_num",
-    "q22_exclusion",
-    "q23_clean_cell",
-    "q24_merge_continuation",
-    "q26_approx_agg",
-    "q33_math",
-    "q35_array",
-    "q37_base64",
-    "q40_exact_dedup",
-    "q41_jaccard_pairs",
-    "q44_cosine_topk",
-    "q88_repetition_filter",
-    "q89_curation_pipeline",
-    "q90_pii_redact",
-    "q91_scd2_history",
-    "q92_bucketed_join",
-    "q93_outlier_zscore",
-    "q94_unigram_logprob",
-    "q95_inverted_index",
-    "q96_winsorize",
-    "q97_time_rollup",
-    "q98_point_in_time_join",
-    "q99_hybrid_retrieval",
-)
+# ``queries()`` (insertion order). The order is derived from the driver's
+# records at the repo root: never-green queries first, then from the
+# stalest latest-green round to the freshest, name order within a round.
+# So each new CORRECTNESS_r*.json rotates the sample onto the queries
+# verified longest ago. Without the records the order is by name.
+# Tripwire: tests/test_registry.py::test_priority_rotation_is_fresh.
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+
+
+def green_row(row: dict) -> bool:
+    """Green means: value-hash match, or — for queries with no oracle
+    SQL (the driver emits no hash there) — a rows-only match with no
+    error recorded."""
+    return row.get("hash_match") is True or (
+        row.get("hash_match") is None
+        and row.get("rows_match") is True
+        and not row.get("err")
+    )
+
+
+def latest_green_rounds() -> dict[str, int]:
+    """query name -> latest driver round in which it was green."""
+    latest: dict[str, int] = {}
+    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(path.read_text()).items():
+            if green_row(row):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -317,16 +87,8 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(mod.QUERIES)
-    missing = [name for name in _PRIORITY if name not in merged]
-    if missing:
-        raise ValueError(
-            f"_PRIORITY names not defined by any query module: {missing}"
-        )
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in _PRIORITY:
-        out[name] = merged.pop(name)
-    out.update(merged)
-    return out
+    greens = latest_green_rounds()
+    return {n: merged[n] for n in sorted(merged, key=lambda n: (greens.get(n, 0), n))}
 
 
 def all_oracles() -> dict[str, str]:

@@ -119,8 +119,7 @@ def q171_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the model, the scoring join) whose subtrees Catalyst cannot
     exchange-reuse once the small model side broadcasts: the r13
     before-plan showed FOUR separate corpus scans each paying the
-    interpreted gram build (plans/r13/q171_bigram_logprob_before.txt);
-    pinned, the corpus text is scanned twice total (bigrams + the
+    interpreted gram build; pinned, the corpus text is scanned twice total (bigrams + the
     deliberate standalone V pass) and exploded once. Log is float
     with round-4 before output — the q94 convention the sweep accepts
     (both engines compute ln of the identical rational).

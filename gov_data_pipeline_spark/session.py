@@ -12,7 +12,7 @@ changes master/memory):
 - ``spark.sql.shuffle.partitions`` is a *default*, not a plan: AQE
   coalesces it down for small stages and splits skewed partitions up.
   On a 1000-executor cluster you would raise the default (e.g. 2000+)
-  and let AQE trim; locally 32 matches the core count.
+  and let AQE trim; locally it matches the core count.
 - Arrow on: every pandas_udf / mapInPandas / toPandas crossing is
   Arrow-batched, never row-at-a-time pickle.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
@@ -24,7 +24,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Unset, the session sizes itself to the host: every core it may run
+# on, and a driver of at most 16 GiB and at most half of physical memory
+# (a 32-core / 128 GiB host gets local[32] and 16 GiB).
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+DEFAULT_DRIVER_MEM = os.environ.get(
+    "SPARK_GRAFT_DRIVER_MEM",
+    f"{min(16 * 1024, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**21)}m",
+)
 
 
 def get_spark(
@@ -35,11 +42,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Parameters are overridable for tests; defaults target the
-    local[32] / 128 GiB harness while keeping every setting valid for a
-    multi-executor cluster.
+    Parameters are overridable for tests; defaults size a local session
+    to the host while keeping every setting valid for a multi-executor
+    cluster.
     """
-    cpus = int(DEFAULT_CPUS)
+    cpus = DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -103,7 +110,7 @@ def get_spark(
         # load nanos columns as epoch-nanos longs instead of erroring.
         # --- local-mode niceties (harmless on a cluster) -------------
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -315,3 +315,98 @@ class TestPartialCorrection:
         assert row["a"] == "FIXED"
         assert row["b"] == "orig_b"  # used to be nulled
         assert row["id"] == "1"
+
+
+class TestRowSafety:
+    def test_each_stage_runs_once_per_row_under_a_random_model(self, spark):
+        """enrich_table must not depend on the model being deterministic
+        or on how often Spark evaluates a lineage: with an OCR answer
+        that is random per call (sometimes empty, which flips the brand
+        stage's gate), the output keeps exactly the input rows, each OCR
+        row's image request is sent once, and each non-excluded row
+        sends one correction request. Calls are counted per request key
+        in an accumulator across the Python workers."""
+        import base64
+        import json
+        import random
+        from collections import Counter
+
+        from pyspark.accumulators import AccumulatorParam
+
+        from gov_data_pipeline_spark.llm import enrich_table
+        from gov_data_pipeline_spark.llm.client import _image_payload
+
+        class CounterParam(AccumulatorParam):
+            def zero(self, value):
+                return Counter()
+
+            def addInPlace(self, a, b):
+                a.update(b)
+                return a
+
+        class RandomOcrClient(MockLLMClient):
+            def __init__(self, acc):
+                super().__init__()
+                self.acc = acc
+
+            async def complete(self, request):
+                image = _image_payload(request)
+                if image is not None:
+                    self.acc.add(Counter({("image", image): 1}))
+                    return random.choice(["", f"LOGO {random.random():.6f}"])
+                if request.model == "correction":
+                    row = json.loads(request.messages[-1]["content"])
+                    self.acc.add(Counter({("correction", row["id"]): 1}))
+                else:
+                    self.acc.add(Counter({(request.model, None): 1}))
+                return await super().complete(request)
+
+        class Factory:
+            def __init__(self, acc):
+                self.acc = acc
+
+            def __call__(self):
+                return RandomOcrClient(self.acc)
+
+        def uri(i: int) -> str:
+            return "data:image/png;base64," + base64.b64encode(f"img {i}".encode()).decode()
+
+        n = 120
+        rows = []
+        for i in range(n):
+            excluded = i % 6 == 0
+            needs_image = i % 5 == 0
+            rows.append(
+                (
+                    i,
+                    "" if needs_image else f"Brand {i}",
+                    uri(i) if needs_image else "",
+                    "исключен" if excluded else f"descr {i}",
+                )
+            )
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 5),
+            "id long, brand string, image string, descr string",
+        )
+        assert df.rdd.getNumPartitions() >= 4
+
+        acc = spark.sparkContext.accumulator(Counter(), CounterParam())
+        out = enrich_table(df, "brand", "image", "descr", Factory(acc), correction=True).collect()
+        calls = acc.value
+
+        # row identity: same count, same keys, no duplicates
+        assert len(out) == n
+        assert sorted(int(r["id"]) for r in out) == list(range(n))
+
+        ocr_rows = {uri(i) for i, _, img, _ in rows if img and i % 6 != 0}
+        image_calls = {k: v for (kind, k), v in calls.items() if kind == "image"}
+        assert image_calls == dict.fromkeys(ocr_rows, 1)
+
+        kept = {i for i in range(n) if i % 6 != 0}
+        corr_calls = {k: v for (kind, k), v in calls.items() if kind == "correction"}
+        assert corr_calls == dict.fromkeys(kept, 1)
+
+        # the brand stage ran once for every kept row that ended up with
+        # a brand, whatever the random OCR answered for it
+        branded = sum(1 for r in out if r["excluded"] == "Нет" and r["brand"])
+        assert calls[("brand", None)] == branded

@@ -4,9 +4,12 @@ silently drop a query from the driver's correctness sweep."""
 
 import re
 
-import pytest
-
-from gov_data_pipeline_spark.queries import _MODULES, _PRIORITY, all_oracles, all_queries
+from gov_data_pipeline_spark.queries import (
+    _MODULES,
+    all_oracles,
+    all_queries,
+    green_row,
+)
 
 
 def test_no_duplicate_query_keys_across_modules():
@@ -29,41 +32,36 @@ def test_query_naming_convention_and_callables():
 
 
 def test_every_priority_name_resolves():
-    """A _PRIORITY entry naming a query no module defines must raise
-    loudly — round 3 shipped four phantom priority names that
-    all_queries() silently swallowed, leaving new surface without any
-    oracle coverage."""
-    qs = all_queries()
-    for name in _PRIORITY:
-        assert name in qs, f"_PRIORITY names unknown query {name}"
-    # priority names enumerate first — the driver samples the first 50
-    assert list(qs)[: len(_PRIORITY)] == list(_PRIORITY)
+    """The rotation order is a permutation of the module registries:
+    every name it enumerates resolves to a query and none is dropped."""
+    assert set(all_queries()) == {n for m in _MODULES for n in m.QUERIES}
+
+
+def test_rotation_falls_back_to_name_order_without_records(monkeypatch, tmp_path):
+    import gov_data_pipeline_spark.queries as reg
+
+    monkeypatch.setattr(reg, "_REPO_ROOT", tmp_path)
+    names = list(all_queries())
+    assert names == sorted(names)
 
 
 def test_priority_rotation_is_fresh():
-    """_PRIORITY staleness tripwire (round-7 process fault: the tuple
-    was not re-derived after r06, so r06 and r07 sampled the IDENTICAL
+    """Rotation staleness tripwire (round-7 process fault: the order was
+    not re-derived after r06, so r06 and r07 sampled the IDENTICAL
     50 queries and a full driver round verified nothing new).
 
     The driver samples the first 50 entries of queries(). Invariant:
     no query inside the sample may have a FRESHER latest-green driver
     round than any query outside it — never-sampled queries (no row in
-    any CORRECTNESS file) count as stalest of all. Violated ⟺ someone
-    added queries or a new CORRECTNESS_r*.json landed without
-    re-deriving _PRIORITY. Ties across the boundary are fine."""
+    any CORRECTNESS file) count as stalest of all. The latest-green
+    rounds are recomputed here from the files, independently of the
+    registry's own derivation. Ties across the boundary are fine."""
     import glob
     import json
+    import os
     import re as _re
 
-    import os
-    import sys
-
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo_root, "scripts"))
-    from derive_priority import green_row  # shared predicate — one truth
-
-    from gov_data_pipeline_spark.queries import VERIFICATION_DEBT
-
     latest_green: dict[str, int] = {}
     files = sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")))
     assert files, "no CORRECTNESS files — driver layout changed?"
@@ -72,30 +70,16 @@ def test_priority_rotation_is_fresh():
         for q, row in json.load(open(f)).items():
             if green_row(row):
                 latest_green[q] = max(latest_green.get(q, -1), rnd)
-    # A restructured query's pre-restructure green verified a plan that
-    # no longer exists — rotation treats it as stalest (r13 verdict 1b;
-    # same override derive_priority.latest_green_rounds applies).
-    for q in VERIFICATION_DEBT:
-        latest_green.pop(q, None)
     names = list(all_queries())
     key = lambda q: latest_green.get(q, -1)  # noqa: E731
     sample, rest = names[:50], names[50:]
     stale_out = min(rest, key=key)
     fresh_in = max(sample, key=key)
     assert key(fresh_in) <= key(stale_out), (
-        f"_PRIORITY is stale: {fresh_in} (green r{key(fresh_in)}) sits "
+        f"rotation is stale: {fresh_in} (green r{key(fresh_in)}) sits "
         f"inside the driver's 50-query sample while {stale_out} (green "
-        f"r{key(stale_out)}) sits outside — re-derive _PRIORITY from "
-        "the newest CORRECTNESS_r*.json (queries/__init__.py)"
+        f"r{key(stale_out)}) sits outside (queries/__init__.py)"
     )
-
-
-def test_phantom_priority_name_raises(monkeypatch):
-    import gov_data_pipeline_spark.queries as reg
-
-    monkeypatch.setattr(reg, "_PRIORITY", ("q99_does_not_exist",))
-    with pytest.raises(ValueError, match="q99_does_not_exist"):
-        reg.all_queries()
 
 
 def test_oracle_coverage_is_total():

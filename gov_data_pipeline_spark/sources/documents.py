@@ -10,7 +10,9 @@ Split by dependency surface:
   local parser — no third-party service in the data path);
 - **tables -> DataFrame** is pure logic (ragged-row padding, header
   dedup, ingest-order row index) re-expressing
-  ``handlers/kyrgyzstan.py:239-270``, fully testable here;
+  ``handlers/kyrgyzstan.py:239-270``, fully testable here; every
+  decoded table enters Spark through ``lift_rows`` as a one-partition
+  Arrow local relation;
 - **image attach** (R18/R19) is a row-index left join; the anchor
   row math (including the reference's ``rowOff > 10000 -> +1 row``
   heuristic and per-source ROW_OFFSET) lives in
@@ -19,7 +21,9 @@ Split by dependency surface:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gov_data_pipeline_spark.transforms.headers import dedup_column_names
 
@@ -45,6 +49,40 @@ def _require_magic(data: bytes, magic: bytes, fmt: str) -> None:
 # deliberately no offset table here to "wire in".
 
 
+def lift_rows(
+    spark: SparkSession,
+    rows: list,
+    names: list[str],
+    idx_col: str = "row_idx",
+) -> DataFrame:
+    """Lift decoded driver rows into Spark: each row is
+    ``(row_idx, *cells)``, ``names`` names the string cells, and cells a
+    short row lacks become null.
+
+    The result is one Arrow local relation in one partition, the
+    engine's counterpart of the reference's in-memory table per
+    workbook. Arrow rows are not pickled, so no scan of it starts a
+    Python worker, whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says. Its size is known to the planner, so it broadcasts into a
+    join, and its single partition satisfies a global window or sort
+    without an exchange. One partition is also the unit of enrichment:
+    a document's model requests share one task's event loop.
+    """
+    width = len(names) + 1
+    full = [list(r) + [None] * (width - len(r)) for r in rows]
+    cols = list(zip(*full)) if full else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(cols[0], pa.int64())]
+        + [pa.array(c, pa.string()) for c in cols[1:]],
+        names=[idx_col, *names],
+    )
+    schema = StructType(
+        [StructField(idx_col, LongType())]
+        + [StructField(n, StringType()) for n in names]
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
 def assemble_rows(
     spark: SparkSession,
     rows: list[list[str | None]],
@@ -53,12 +91,13 @@ def assemble_rows(
 ) -> DataFrame:
     """Pure re-expression of the reference's table assembly
     (``handlers/kyrgyzstan.py:249-270``): pad ragged rows to the max
-    width, promote row 0 to deduped column names, drop the first
-    ``skip_rows`` rows, attach the ingest-order index.
+    width with ``""``, promote row 0 to deduped column names, drop the
+    first ``skip_rows`` rows, attach the ingest-order index.
 
-    The driver-side list is fine: document tables are small (one
-    registry workbook); massive file sets ingest per-file in parallel
-    tasks, each calling this on its own document.
+    A document table is small (one registry file), so it is lifted
+    whole by ``lift_rows`` as one local relation in one partition;
+    massive file sets ingest per-file, each file calling this on its
+    own document.
     """
     if not rows:
         raise ValueError("assemble_rows: empty input")
@@ -71,8 +110,7 @@ def assemble_rows(
         [i, *[str(c) if c is not None else "" for c in r]]
         for i, r in enumerate(padded)
     ]
-    schema = f"{idx_col} long, " + ", ".join(f"`{n}` string" for n in names)
-    df = spark.createDataFrame(data, schema)
+    df = lift_rows(spark, data, names, idx_col)
     return df.filter(F.col(idx_col) >= skip_rows)
 
 
@@ -125,10 +163,9 @@ def images_to_df(
     image_col: str = "Изображение",
 ) -> DataFrame:
     """Lift ``extract_xlsx_images`` output into the join input of
-    ``attach_images``. Empty extraction -> empty two-column frame."""
-    return spark.createDataFrame(
-        images, f"{idx_col} long, `{image_col}` string"
-    )
+    ``attach_images`` (``lift_rows``, so the join broadcasts it).
+    Empty extraction -> empty two-column frame."""
+    return lift_rows(spark, images, [image_col], idx_col)
 
 
 def attach_images(

@@ -2,7 +2,8 @@
 
 Workbooks are a small-data driver-side format: the reference reads one
 registry workbook per country per week (``handlers/base.py:150-180``).
-The bridge is rows <-> ``createDataFrame``.
+Decoded rows enter Spark through ``documents.lift_rows``, as one
+Arrow local relation in one partition; the sink collects to the driver.
 
 Engine selection: pandas+openpyxl when importable (full xlsx feature
 surface), otherwise the pure-stdlib SpreadsheetML codec
@@ -19,7 +20,10 @@ from __future__ import annotations
 
 import io
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from gov_data_pipeline_spark.sources.documents import lift_rows
+from gov_data_pipeline_spark.util import qcol
 
 
 def _excel_engine() -> str:
@@ -37,7 +41,6 @@ def read_excel(
     source: str | bytes,
     skip_rows: int = 0,
     sheet: int = 0,
-    all_strings: bool = True,
     idx_col: str = "row_idx",
 ) -> DataFrame:
     """Read a workbook (path or bytes) into a DataFrame with an explicit
@@ -72,13 +75,11 @@ def read_excel(
     width = max((len(r) for r in rows), default=0)
     if width == 0:
         raise ValueError("read_excel: empty sheet")
-    names = [f"c{i}" for i in range(width)]
-    padded = [
-        [i, *[r[j] if j < len(r) else None for j in range(width)]]
-        for i, r in enumerate(rows)
-    ]
-    schema = f"{idx_col} long, " + ", ".join(f"`{n}` string" for n in names)
-    return spark.createDataFrame(padded, schema)
+    # lift_rows pads ragged rows with nulls
+    return lift_rows(
+        spark, [[i, *r] for i, r in enumerate(rows)],
+        [f"c{i}" for i in range(width)], idx_col,
+    )
 
 
 def write_excel(df: DataFrame, path_or_buf, max_rows: int = 1_048_576) -> None:
@@ -105,7 +106,7 @@ def write_excel(df: DataFrame, path_or_buf, max_rows: int = 1_048_576) -> None:
     # to float64, where nulls are NaN (stringifying to literal 'nan')
     # and integers grow a '.0' suffix. Spark's string cast keeps nulls
     # null and longs integral.
-    sdf = df.select([F.col(c).cast("string").alias(c) for c in df.columns])
+    sdf = df.select([qcol(c).cast("string").alias(c) for c in df.columns])
     pdf = sdf.limit(max_rows).toPandas()
     if len(pdf) > max_rows - 1:
         raise ValueError(

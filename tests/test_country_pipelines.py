@@ -12,6 +12,8 @@ from gov_data_pipeline_spark.util import qcol
 from gov_data_pipeline_spark.country_pipelines import (
     BELARUS_BRAND,
     BELARUS_DESC,
+    KAZ_BRAND,
+    KAZ_DESC,
     KG_BRAND,
     KG_KEY,
     belarus_pipeline,
@@ -21,8 +23,11 @@ from gov_data_pipeline_spark.country_pipelines import (
 from gov_data_pipeline_spark.llm import MockLLMClient
 from gov_data_pipeline_spark.sources.documents import (
     assemble_rows,
+    extract_xlsx_images,
+    images_to_df,
     xlsx_image_anchor_row,
 )
+from gov_data_pipeline_spark.sources.excel import read_excel
 
 
 def _b64_uri(text: str) -> str:
@@ -99,6 +104,54 @@ class TestKyrgyzstan:
         assert merged[KG_BRAND] == "БрендКг хвост бренда"
         assert "0124-ТЗ" in by_key
         assert by_key["0124-ТЗ"]["Правообладатель"] == "Кто-то"
+
+
+class TestSourcePlanShape:
+    """A decoded document enters Spark as one local relation in one
+    partition: no scan of it starts a Python worker, the image join
+    broadcasts, the continuation-merge window needs no shuffle, and
+    enrichment runs as one task per document."""
+
+    @staticmethod
+    def _assert_local_one_partition(out):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan
+        assert "SortMergeJoin" not in plan
+        assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+        assert out.rdd.getNumPartitions() == 1
+        return plan
+
+    def test_kazakhstan_from_workbook(self, spark):
+        from gov_data_pipeline_spark.sources.png_codec import solid_png
+        from gov_data_pipeline_spark.sources.xlsx_zip import write_xlsx
+
+        rows = [
+            [KAZ_BRAND, KAZ_DESC, KG_KEY],
+            ["prolog", "x", "x"],
+            *[[f"Бренд {i}", "товары", f"{i:04d}"] for i in range(20)],
+        ]
+        wb = write_xlsx(rows, images=[(4, 3, 0, solid_png(2, 2, (1, 2, 3)))])
+        images = images_to_df(spark, extract_xlsx_images(wb))
+        out = kazakhstan_pipeline(read_excel(spark, wb), images, MockLLMClient)
+        plan = self._assert_local_one_partition(out)
+        assert "BroadcastHashJoin" in plan
+        got = out.collect()
+        assert len(got) == 20
+        assert sum(r["Изображение"] != "" for r in got) == 1
+
+    def test_kyrgyzstan_from_assembled_rows(self, spark):
+        tables = [
+            [KG_KEY, KG_BRAND, "Правообладате ль"],
+            ["hdr2", "hdr2", "hdr2"],
+            ["№ 0 123/ТЗ", "БрендКг", "Владелец"],
+            ["продолжение", "хвост бренда", ""],
+            ["0124 – ТЗ", "Другой", "Кто-то"],
+        ]
+        out = kyrgyzstan_pipeline(assemble_rows(spark, tables, skip_rows=2), MockLLMClient)
+        self._assert_local_one_partition(out)
+        assert sorted(r[KG_KEY] for r in out.collect()) == [
+            "0123/ТЗ продолжение", "0124-ТЗ",
+        ]
 
 
 class TestAnchorMath:

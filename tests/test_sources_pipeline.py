@@ -138,6 +138,24 @@ class TestExcel:
         rows = back.orderBy("row_idx").collect()
         assert rows[0]["c0"] == "a" and rows[1]["c0"] == "x"  # header row + data
 
+    def test_roundtrip_dotted_registry_names(self, spark):
+        """Registry headers carry dots ("Рег. №"); the sink must select
+        them as literal names, not as struct-field paths."""
+        from gov_data_pipeline_spark.sources import read_excel, write_excel
+
+        df = spark.createDataFrame(
+            [("0123/ТЗ", "Бренд"), ("0124-ТЗ", None)],
+            "`Рег. №` string, `Наименование` string",
+        )
+        buf = io.BytesIO()
+        write_excel(df, buf)
+        back = read_excel(spark, buf.getvalue()).orderBy("row_idx").collect()
+        assert [tuple(r)[1:] for r in back] == [
+            ("Рег. №", "Наименование"),
+            ("0123/ТЗ", "Бренд"),
+            ("0124-ТЗ", None),
+        ]
+
 
 class TestMultimodal:
     def test_schema_and_batchwise_decode(self, spark):
@@ -327,12 +345,29 @@ class TestDocumentCodecs:
         got = {r["name"]: r["Изображение"] for r in out.collect()}
         assert got == {"alpha": uri_a, "beta": "", "gamma": uri_b}
 
-    def test_xlsx_rows_roundtrip_ragged_and_gaps(self):
+        # no embedded images -> an empty, typed join input; no row gains one
+        empty = images_to_df(spark, [])
+        assert empty.schema.simpleString() == "struct<row_idx:bigint,Изображение:string>"
+        assert empty.collect() == []
+        got = {r["name"]: r["Изображение"] for r in attach_images(df, empty).collect()}
+        assert got == {"alpha": "", "beta": "", "gamma": ""}
+
+    def test_xlsx_rows_roundtrip_ragged_and_gaps(self, spark):
+        from gov_data_pipeline_spark.sources.excel import read_excel
         from gov_data_pipeline_spark.sources.xlsx_zip import read_xlsx_rows, write_xlsx
 
         rows = [["a", "b", "c"], ["1", None, "3"], [], ["x"]]
-        back = read_xlsx_rows(write_xlsx(rows))
+        wb = write_xlsx(rows)
+        back = read_xlsx_rows(wb)
         assert back == [["a", "b", "c"], ["1", None, "3"], [], ["x"]]
+        # read_excel pads short rows with nulls, not ""
+        got = [tuple(r) for r in read_excel(spark, wb).orderBy("row_idx").collect()]
+        assert got == [
+            (0, "a", "b", "c"),
+            (1, "1", None, "3"),
+            (2, None, None, None),
+            (3, "x", None, None),
+        ]
 
     def test_docx_tables_to_merged_records(self, spark):
         from gov_data_pipeline_spark.sources.documents import assemble_rows, docx_tables
@@ -356,6 +391,12 @@ class TestDocumentCodecs:
             ("№1234/ТЗ", "first continues"),
             ("№5678 продолжение", "second tail"),
         ]
+
+        # assemble_rows pads and maps None to "", and keeps dotted headers
+        df = assemble_rows(spark, [["Рег. №", "info"], ["№1", None], ["№2"]], skip_rows=1)
+        assert df.columns == ["row_idx", "Рег. №", "info"]
+        got = [tuple(r) for r in df.orderBy("row_idx").collect()]
+        assert got == [(1, "№1", ""), (2, "№2", "")]
 
     def test_docx_merged_cells_match_python_docx_semantics(self):
         """gridSpan repeats text across spanned columns; vMerge

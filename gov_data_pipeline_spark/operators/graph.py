@@ -15,8 +15,8 @@ standard shuffle-bounded CC for Spark:
   current minimum neighbor (or itself);
 - ``small-star``: every node points its smaller-or-equal neighbors at
   its minimum neighbor;
-- iterate to fixpoint; edges converge to (min-of-component -> member)
-  stars in O(log^2 n) rounds on real graphs.
+- iterate until the edges are (member -> min-of-component) stars, in
+  O(log^2 n) rounds on real graphs.
 
 Each round is a min-aggregate plus an equi-join on the node id (the
 join reuses the aggregate's hash partitioning, so one real shuffle)
@@ -24,8 +24,19 @@ followed by a distinct. Everything stays in the EDGE domain — no
 per-component array is ever materialized, so a giant skewed component
 spreads across the cluster instead of landing in one task's memory
 (this is why the implementation deliberately avoids ``collect_set``).
-The driver-side loop only checks scalar convergence counts per round,
-never collecting data rows.
+The driver-side loop checks one scalar per round: whether the round's
+output is already a set of stars.
+
+Size gate: an edge set of at most ``_DRIVER_MAX_EDGES`` (1M) edges is
+collected and labeled by a union-find on the driver instead. Verified
+duplicate pairs are usually far below it, and the star rounds cost
+tens of Spark jobs however few edges there are. The bound is a
+measurement: on a 4-vCPU host with a 2 GiB driver, 1M random edges
+over 2M ids took 1.0 s to collect and 5.0 s to label on the driver
+(peak RSS of the Python driver 296 MB, 9.8 s for the whole operator),
+and 80 s as star rounds. Above the bound only the star rounds keep
+the edge set off the driver. Both paths label a node with its
+component minimum, so the path never changes a result.
 
 At 100 TB the edge set from LSH candidates is orders of magnitude
 smaller than the corpus. Iterative plans double their lineage every
@@ -38,7 +49,14 @@ where executor loss mid-computation must be survivable.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Edge sets up to this size are labeled on the driver (module docstring).
+_DRIVER_MAX_EDGES = 1_000_000
+# Star iterations before the distributed path gives up.
+_MAX_ROUNDS = 20
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -63,20 +81,65 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     return out.filter(F.col("u") != F.col("v")).distinct()
 
 
+def _is_stars(edges: DataFrame) -> bool:
+    """Whether small-star output (edges point larger -> smaller) is a
+    set of stars: no node has two out-edges and no node is both a
+    source and a target. One aggregate, read with ``isEmpty``."""
+    ends = edges.select(
+        F.col("u").alias("n"), F.lit(1).alias("o"), F.lit(0).alias("i")
+    ).union(edges.select(F.col("v").alias("n"), F.lit(0), F.lit(1)))
+    bad = (
+        ends.groupBy("n")
+        .agg(F.sum("o").alias("o"), F.sum("i").alias("i"))
+        .filter((F.col("o") > 1) | ((F.col("o") > 0) & (F.col("i") > 0)))
+    )
+    return bad.isEmpty()
+
+
+def _label_on_driver(edges: DataFrame) -> DataFrame:
+    """Union-find over the collected (u, v) edges: (node, component)
+    as one Arrow local relation in one partition, so a join against it
+    broadcasts. Each root is the minimum of its set."""
+    table = edges.toArrow()
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(table.column("u").to_pylist(), table.column("v").to_pylist()):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    id_type = table.schema.field("u").type
+    out = pa.Table.from_arrays(
+        [pa.array(nodes, id_type), pa.array([find(n) for n in nodes], id_type)],
+        names=["node", "component"],
+    )
+    dt = edges.schema["u"].dataType
+    schema = StructType([StructField("node", dt), StructField("component", dt)])
+    return edges.sparkSession.createDataFrame(out, schema).coalesce(1)
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a_id",
     b_col: str = "b_id",
-    max_rounds: int = 20,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Component id (minimum member id) per node: (node, component).
 
     Isolated nodes don't appear in ``pairs`` and so don't appear here;
     union them in as (id, id) downstream if every doc needs a label.
-    Converges when a large+small round leaves the edge set unchanged
-    (count compare first — a scalar — then a set compare only on
-    count equality).
+    Self-loops and edges with a null endpoint are ignored. At most
+    ``_DRIVER_MAX_EDGES`` distinct edges are labeled on the driver and
+    returned as a one-partition local relation. Larger edge sets run
+    the star rounds, which converge when a small-star output is a set
+    of stars (each leaf points at its root, the component minimum).
     """
     edges = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
@@ -84,25 +147,23 @@ def connected_components(
         .distinct()
     )
     edges = edges.checkpoint() if reliable_checkpoint else edges.localCheckpoint()
-    converged = False
-    for _ in range(max_rounds):
-        after = _star_round(_star_round(edges, large=True), large=False)
+    if edges.count() <= _DRIVER_MAX_EDGES:
+        return _label_on_driver(edges)
+    for _ in range(_MAX_ROUNDS):
+        edges = _star_round(_star_round(edges, large=True), large=False)
         # Cut lineage every round: iterative plans double otherwise and
         # the optimizer itself becomes the bottleneck (or OOMs).
-        after = after.checkpoint() if reliable_checkpoint else after.localCheckpoint()
-        if after.count() == edges.count() and after.exceptAll(edges).isEmpty():
-            edges = after
-            converged = True
+        edges = edges.checkpoint() if reliable_checkpoint else edges.localCheckpoint()
+        if _is_stars(edges):
             break
-        edges = after
-    if not converged:
+    else:
         # Unconverged stars would yield multiple labels per true
         # component — silently wrong dedup. Fail loudly instead.
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds; "
-            "raise max_rounds (convergence is O(log^2 n) rounds)"
+            f"connected_components did not converge in {_MAX_ROUNDS} star "
+            "iterations; real graphs need O(log^2 n)"
         )
-    # Fixpoint edges are (member -> component-min) stars.
+    # Stars are (member -> component-min) edges.
     comp = edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = edges.select(F.col("v").alias("node"), F.col("v").alias("component"))
     return comp.union(roots).groupBy("node").agg(F.min("component").alias("component"))

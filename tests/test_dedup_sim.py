@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from gov_data_pipeline_spark.operators.graph import _DRIVER_MAX_EDGES
 from gov_data_pipeline_spark.queries.dedup_sim import (
     _MUT_OFFSET,
     q41_jaccard_pairs,
@@ -229,23 +230,36 @@ def test_stop_shingle_cap_kills_boilerplate_pairs(spark):
     assert cap_pairs == {(0, 3)}
 
 
+def _cc_both_paths(monkeypatch, pairs):
+    """``connected_components`` on the driver-side path and, with the
+    size gate at 0, on the distributed star rounds. Asserts the two
+    agree on labels and column types; returns the labels."""
+    from gov_data_pipeline_spark.operators import graph
+
+    results = []
+    for bound in (_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", bound)
+        out = graph.connected_components(pairs)
+        types = [(f.name, f.dataType) for f in out.schema.fields]
+        results.append((types, {r["node"]: r["component"] for r in out.collect()}))
+    assert results[0] == results[1]
+    types, comp = results[0]
+    id_type = pairs.schema["a_id"].dataType
+    assert types == [("node", id_type), ("component", id_type)]
+    return comp
+
+
 class TestConnectedComponents:
-    def test_chain_star_and_isolated(self, spark):
+    def test_chain_star_and_isolated(self, spark, monkeypatch):
         """Chain 1-2-3-4, separate pair 10-11, and a hub 20-{21,22,23};
         component = min member; isolated corpus docs label themselves."""
-        from gov_data_pipeline_spark.operators.graph import (
-            connected_components,
-            dedup_clusters,
-        )
+        from gov_data_pipeline_spark.operators import graph
 
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (20, 22), (20, 23)],
             "a_id long, b_id long",
         )
-        comp = {
-            r["node"]: r["component"]
-            for r in connected_components(pairs).collect()
-        }
+        comp = _cc_both_paths(monkeypatch, pairs)
         assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
                         20: 20, 21: 20, 22: 20, 23: 20}
 
@@ -253,22 +267,43 @@ class TestConnectedComponents:
             [(i,) for i in [1, 2, 3, 4, 10, 11, 20, 21, 22, 23, 99]],
             "doc_id long",
         )
-        lab = dedup_clusters(pairs, corpus, "doc_id").collect()
-        by_id = {r["doc_id"]: (r["component"], r["is_canonical"]) for r in lab}
-        assert by_id[99] == (99, True)  # isolated doc is its own canonical
-        assert by_id[4] == (1, False)
-        assert sum(1 for c, canon in by_id.values() if canon) == 4
+        for bound in (_DRIVER_MAX_EDGES, 0):
+            monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", bound)
+            lab = graph.dedup_clusters(pairs, corpus, "doc_id").collect()
+            by_id = {r["doc_id"]: (r["component"], r["is_canonical"]) for r in lab}
+            assert by_id[99] == (99, True)  # isolated doc is its own canonical
+            assert by_id[4] == (1, False)
+            assert sum(1 for c, canon in by_id.values() if canon) == 4
 
-    def test_two_cliques_merge_via_bridge(self, spark):
-        from gov_data_pipeline_spark.operators.graph import connected_components
-
+    def test_two_cliques_merge_via_bridge(self, spark, monkeypatch):
         edges = [(i, j) for i in range(5) for j in range(i + 1, 5)]
         edges += [(10 + i, 10 + j) for i in range(5) for j in range(i + 1, 5)]
         edges += [(4, 10)]  # bridge
         pairs = spark.createDataFrame(edges, "a_id long, b_id long")
-        comp = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
+        comp = _cc_both_paths(monkeypatch, pairs)
         assert set(comp.values()) == {0}
         assert len(comp) == 10
+
+    def test_string_ids_label_with_the_smallest_string(self, spark, monkeypatch):
+        pairs = spark.createDataFrame(
+            [("doc-b", "doc-a"), ("doc-c", "doc-b"), ("x9", "x10")],
+            "a_id string, b_id string",
+        )
+        comp = _cc_both_paths(monkeypatch, pairs)
+        assert comp == {"doc-a": "doc-a", "doc-b": "doc-a", "doc-c": "doc-a",
+                        "x10": "x10", "x9": "x10"}
+
+    def test_edge_with_a_null_endpoint_is_ignored(self, spark, monkeypatch):
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, None), (None, 3), (None, None), (5, 6)],
+            "a_id long, b_id long",
+        )
+        comp = _cc_both_paths(monkeypatch, pairs)
+        assert comp == {1: 1, 2: 1, 5: 5, 6: 5}
+
+    def test_self_loops_only_give_an_empty_result(self, spark, monkeypatch):
+        pairs = spark.createDataFrame([(1, 1), (7, 7), (7, 7)], "a_id long, b_id long")
+        assert _cc_both_paths(monkeypatch, pairs) == {}
 
 
 class TestSearch:

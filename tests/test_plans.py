@@ -600,6 +600,27 @@ class TestRound2OperatorPlans:
         plan = _plan(_star_round(edges, large=True))
         assert "collect_set" not in plan and "collect_list" not in plan
 
+    def test_small_connected_components_is_a_broadcast_local_relation(self, spark):
+        """Below the size gate the labels come back as one local
+        relation in one partition: no exchange, and the corpus join in
+        ``dedup_clusters`` broadcasts it."""
+        from gov_data_pipeline_spark.operators.graph import (
+            connected_components,
+            dedup_clusters,
+        )
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "a_id long, b_id long"
+        )
+        cc = connected_components(pairs)
+        plan = _plan(cc)
+        assert "LocalTableScan" in plan and "Exchange" not in plan, plan
+        assert cc.rdd.getNumPartitions() == 1
+
+        corpus = spark.range(100).withColumnRenamed("id", "doc_id")
+        plan = _plan(dedup_clusters(pairs, corpus, "doc_id"))
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+
     def test_q92_bucketed_join_no_exchange_before_join(self, spark, sf_dir):
         """Both join sides are bucketed on the join key, so the
         sort-merge join must consume the bucketed scans directly:

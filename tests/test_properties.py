@@ -227,17 +227,7 @@ class _UnionFind:
             self.p[max(ra, rb)] = min(ra, rb)
 
 
-@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_connected_components_matches_union_find(spark, edges):
-    """Large-star/small-star must agree with a sequential union-find on
-    arbitrary small graphs (self-loops and duplicate edges included)."""
+def _assert_cc_matches_union_find(spark, edges):
     from gov_data_pipeline_spark.operators.graph import connected_components
 
     pairs = spark.createDataFrame(edges, "a_id long, b_id long")
@@ -257,6 +247,37 @@ def test_connected_components_matches_union_find(spark, edges):
         roots.setdefault(r, n)
         want[n] = roots[r]
     assert got == want
+
+
+_CC_EDGES = st.lists(
+    st.tuples(st.integers(0, 30), st.integers(0, 30)),
+    min_size=1,
+    max_size=40,
+)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(edges=_CC_EDGES)
+def test_connected_components_matches_union_find(spark, edges):
+    """Connected components must agree with a sequential union-find on
+    arbitrary small graphs (self-loops and duplicate edges included).
+    Small edge sets take the driver-side union-find path."""
+    _assert_cc_matches_union_find(spark, edges)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(edges=_CC_EDGES)
+def test_connected_components_star_rounds_match_union_find(spark, monkeypatch, edges):
+    """The same property with the driver-side size gate at 0, so every
+    edge set runs the distributed large-star/small-star rounds."""
+    from gov_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
+    _assert_cc_matches_union_find(spark, edges)
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])

@@ -20,9 +20,9 @@ sys.path.insert(0, ".")
 from gov_data_pipeline_spark.catalog import read_table
 from gov_data_pipeline_spark.operators.dedup import (
     lsh_candidate_pairs,
-    minhash_from_shingle_rows,
+    minhash_doc_profile,
     shingle_rows,
-    verify_candidates_jaccard,
+    verify_candidates_hashset,
 )
 from gov_data_pipeline_spark.operators.graph import dedup_clusters
 from gov_data_pipeline_spark.session import get_spark
@@ -77,12 +77,14 @@ def main() -> None:
     corpus = corpus.withColumn("__keep", keep_min).filter("__keep").drop("__keep")
     print(f"after canonical-key dedup: {corpus.count()}")
 
-    ex = shingle_rows(corpus, "doc_id", F.col("text"), 3, widen=False)
-    sigs = minhash_from_shingle_rows(ex, "doc_id", num_hashes=32)
-    cands = lsh_candidate_pairs(sigs, "doc_id", "sig", bands=8, rows_per_band=4)
+    # one profile row per doc (signature + shingle-hash set) feeds both
+    # the band join and the exact-Jaccard verify, as in q75
+    ex = shingle_rows(corpus, "doc_id", F.col("text"), 3, widen=False, distinct=False)
+    prof = minhash_doc_profile(ex, "doc_id", num_hashes=32)
+    cands = lsh_candidate_pairs(prof, "doc_id", "sig", bands=8, rows_per_band=4, sig_len=32)
     print(f"LSH candidate pairs: {cands.count()}")
 
-    pairs = verify_candidates_jaccard(cands, ex, "doc_id", threshold=0.5)
+    pairs = verify_candidates_hashset(cands, prof, "doc_id", threshold=0.5)
     print(f"verified near-dup pairs (jaccard >= 0.5): {pairs.count()}")
 
     labeled = dedup_clusters(pairs.select("a_id", "b_id"), corpus, "doc_id")

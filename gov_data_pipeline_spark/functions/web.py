@@ -259,59 +259,3 @@ def robots_allowed_col(rules: Column, path: Column) -> Column:
         )
     )
     return F.when(F.size(matching) == 0, F.lit(True)).otherwise(best["allow"])
-
-
-def html_links_col(html: Column) -> Column:
-    """All ``href`` values of anchor tags, in document order, entity
-    ``&amp;`` decoded (hrefs escape query ampersands) — array<string>.
-    Accepts single- or double-quoted attributes; unquoted hrefs are
-    rare enough to leave to the DOM-accurate pass."""
-    hrefs = F.regexp_extract_all(
-        html, F.lit(r"""(?is)<a\b[^>]*?href\s*=\s*["']([^"']*)["']"""), 1
-    )
-    return F.transform(
-        hrefs, lambda u: F.replace(F.trim(u), F.lit("&amp;"), F.lit("&"))
-    )
-
-
-def resolve_url_col(base: Column, href: Column) -> Column:
-    """Resolve ``href`` against an absolute http(s) ``base`` URL —
-    the frontier step after :func:`html_links_col`. Handles the four
-    RFC 3986 cases a crawler meets:
-
-    - absolute (``scheme://...``): returned as-is;
-    - protocol-relative (``//host/path``): base's scheme prepended;
-    - root-relative (``/path``): scheme://host + href;
-    - relative (``path``, ``../path``): resolved against the base's
-      directory with ``.``/``..`` segments collapsed (fixed-point
-      removal, bounded by 8 rounds — deeper traversal than 8 levels
-      of ``..`` clamps at root, which is also what browsers do).
-
-    Fragments are dropped (never sent to the server); empty hrefs
-    resolve to the base itself.
-    """
-    scheme = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1)
-    origin = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
-    base_dir = F.concat(
-        origin,
-        F.regexp_replace(
-            F.regexp_extract(base, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)", 1),
-            r"[^/]*$",
-            "",
-        ),
-    )
-    h = F.regexp_replace(F.trim(href), r"#.*$", "")  # drop fragment
-    joined = (
-        F.when(h == "", F.regexp_replace(base, r"#.*$", ""))
-        .when(h.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*://"), h)
-        .when(h.startswith("//"), F.concat(scheme, F.lit(":"), h))
-        .when(h.startswith("/"), F.concat(origin, h))
-        .otherwise(F.concat(base_dir, F.when(base_dir.endswith("/"), h).otherwise(F.concat(F.lit("/"), h))))
-    )
-    # collapse /./ then /seg/../ to fixed point; clamp leading /../
-    out = joined
-    for _ in range(8):
-        out = F.regexp_replace(out, r"/\.(/|$)", "/")
-        out = F.regexp_replace(out, r"/(?!\.\./)[^/]+/\.\./", "/")
-        out = F.regexp_replace(out, r"(://[^/?#]*)/\.\./", r"$1/")
-    return out

@@ -5,14 +5,14 @@ functions) — no Python UDFs — so they stay inside whole-stage codegen
 and scale linearly:
 
 - exact_dedup: hash-groupBy keep-one (one shuffle on the content hash);
-- shingle / minhash_signature / lsh_candidate_pairs: MinHash + banded
-  LSH. The band join is the scale path: candidates are generated by an
-  equi-join on (band_id, band_hash) — an inverted index — never by an
-  all-pairs comparison;
+- shingle_rows / minhash_doc_profile / lsh_candidate_pairs /
+  verify_candidates_hashset: MinHash + banded LSH. The band join is the
+  scale path: candidates are generated by an equi-join on (band_id,
+  band_hash) — an inverted index — never by an all-pairs comparison;
 - jaccard_pairs: exact n-gram-Jaccard pairs via a shingle inverted
   index (explode -> self-join on shingle -> count). Exact, but blocked:
   only pairs sharing >=1 shingle are ever materialized;
-- simhash: 64-bit SimHash via bit-vector aggregation; near-dup blocking
+- simhash_df: SimHash via per-bit sum aggregates; near-dup blocking
   by 8-bit chunk equality (pigeonhole: hamming<=7 implies one of the 8
   chunks matches exactly, so blocking recall is perfect at the verify
   threshold).
@@ -190,21 +190,6 @@ def shingle_rows(
     return out.distinct() if distinct else out
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as a single column expression.
-
-    NOTE: higher-order array functions are interpreted (not codegen'd)
-    in Spark — fine for ad-hoc use on small arrays, but the hot path
-    should use ``minhash_signatures_df`` (explode + codegen'd min
-    aggregates), which is ~10x faster at corpus scale."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(i, s))
-        ),
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     id_col: str,
@@ -217,9 +202,9 @@ def minhash_signatures_df(
     Each (doc, shingle) row is hashed ``num_hashes`` times with
     codegen'd ``xxhash64(i, s)`` and min-aggregated per doc — a single
     hash-aggregate with map-side partial min, one shuffle on the doc id
-    (which downstream banding needs anyway). Produces values identical
-    to ``minhash_signature``; exists because interpreted higher-order
-    lambdas are ~10x slower on wide corpora.
+    (which downstream banding needs anyway). Same values as
+    ``minhash_doc_profile``'s default xxhash64 family, computed from a
+    shingle ARRAY column instead of exploded (id, shingle) rows.
     """
     ex = df.select(F.col(id_col), F.explode(F.col(shingles_col)).alias("__s"))
     aggs = [
@@ -235,9 +220,7 @@ def minhash_signatures_df(
         )
     )
     # LEFT join + all-null signature: an empty shingle array produces no
-    # exploded rows and an inner join would drop the document entirely;
-    # the expression form (minhash_signature) returns [null, ...] for
-    # the same input — keep that parity.
+    # exploded rows and an inner join would drop the document entirely.
     default = F.array(*[F.lit(None).cast("long") for _ in range(num_hashes)])
     return df.join(sig, id_col, "left").withColumn(
         sig_col, F.coalesce(F.col(sig_col), default)
@@ -464,43 +447,6 @@ def md5_h1h2(col: Column) -> tuple[Column, Column]:
     return h1, h2
 
 
-def minhash_from_shingle_rows(
-    ex: DataFrame,
-    id_col: str,
-    num_hashes: int = 32,
-    sig_col: str = "sig",
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """MinHash signatures from exploded (id, shingle) rows — one
-    codegen'd hash-aggregate, no array materialization.
-
-    ``hash_family``: ``"xxhash64"`` (default — fastest, JVM-only) hashes
-    each shingle ``num_hashes`` times; ``"md5"`` digests each shingle
-    once and derives the family as ``g_i = h1 + i*h2`` (Kirsch &
-    Mitzenmacher double hashing) — slightly more arithmetic but
-    bit-reproducible in any md5-capable engine, which is what the
-    DuckDB differential oracle for q42 runs on.
-    """
-    if hash_family == "md5":
-        h1, h2 = md5_h1h2(F.col("s"))
-        aggs = [F.min(h1 + i * h2).alias(f"__m{i}") for i in range(num_hashes)]
-    elif hash_family == "xxhash64":
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"__m{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    return (
-        ex.groupBy(id_col)
-        .agg(*aggs)
-        .select(
-            F.col(id_col),
-            F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias(sig_col),
-        )
-    )
-
-
 def minhash_doc_profile(
     ex: DataFrame,
     id_col: str,
@@ -513,9 +459,15 @@ def minhash_doc_profile(
     """Per-document sketch profile in ONE aggregate: MinHash signature
     + shingle-hash set + shingle count.
 
-    Same signature values as ``minhash_from_shingle_rows``; the extra
-    ``collect_set(xxhash64(s))`` column lets the LSH verify stage score
-    candidate pairs with ``array_intersect`` on two profile-row lookups
+    ``hash_family``: ``"xxhash64"`` (default — fastest, JVM-only) hashes
+    each shingle ``num_hashes`` times; ``"md5"`` digests each shingle
+    once and derives the family as ``g_i = h1 + i*h2`` (Kirsch &
+    Mitzenmacher double hashing) — bit-reproducible in any md5-capable
+    engine, which is what the DuckDB differential oracle for q42 runs
+    on.
+
+    The extra ``collect_set(xxhash64(s))`` column lets the LSH verify
+    stage score candidate pairs with ``array_intersect`` on two profile-row lookups
     instead of re-joining the exploded shingle index twice and
     re-aggregating per pair. Net effect on the physical plan: the
     shingle relation is consumed exactly once, and the verify stage
@@ -653,37 +605,6 @@ def verify_candidates_jaccard(
     )
 
 
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash of a token array, fully native.
-
-    Each token votes ±1 on every bit of its xxhash64; the fingerprint
-    takes the sign of each bit-sum. One aggregate over a 64-int state
-    array — no shuffle, no UDF.
-    """
-    bitvote = lambda t: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.when(
-            F.call_function("shiftright", F.xxhash64(t), i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-        ).otherwise(F.lit(-1)),
-    )
-    sums = F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(acc, bitvote(t), lambda x, y: x + y),
-    )
-    return F.aggregate(
-        F.zip_with(
-            sums,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda s, i: F.when(s > 0, F.call_function("shiftleft", F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a.bitwiseOR(x),
-    )
-
-
 def simhash_df(
     df: DataFrame,
     id_col: str,
@@ -692,10 +613,9 @@ def simhash_df(
     bits: int = 64,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash via explode + ``bits`` codegen'd sum-aggregates (same
-    values as ``simhash64`` for bits=64/xxhash64; exists because
-    interpreted higher-order lambdas are ~10x slower at corpus scale).
-    One shuffle on the doc id.
+    """SimHash via explode + ``bits`` codegen'd sum-aggregates: each
+    token votes ±1 on every bit of its hash and the fingerprint takes
+    the sign of each bit-sum. One shuffle on the doc id.
 
     ``hash_family="md5"`` (bits <= 56) derives the token hash from 14
     hex chars of the md5 digest — reproducible in any md5-capable
@@ -731,21 +651,10 @@ def simhash_df(
     sig = sums.select(F.col(id_col), fp.alias(out_col))
     # LEFT join + zero default: a document whose token array is empty
     # produces no exploded rows, so an inner join would silently drop it
-    # from the dedup pipeline; the expression form (simhash64) returns
-    # fingerprint 0 for the same input — keep that parity.
+    # from the dedup pipeline; it gets fingerprint 0 instead.
     return df.join(sig, id_col, "left").withColumn(
         out_col, F.coalesce(F.col(out_col), F.lit(0).cast("long"))
     )
-
-
-def simhash64_df(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: Column | str,
-    out_col: str = "simhash",
-) -> DataFrame:
-    """64-bit xxhash64 SimHash — the scale-default form of ``simhash_df``."""
-    return simhash_df(df, id_col, tokens_col, out_col, bits=64, hash_family="xxhash64")
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -306,7 +306,7 @@ def pagerank(
     scaled unit per term, so ``0 ≤ scale − Σrank ≤
     iterations·(E + 4·N)`` units — at ``scale=10**12`` a relative
     error ≤ 1e-6 even on a billion-edge graph (pinned in
-    tests/test_graph.py).
+    tests/test_dedup_sim.py).
 
     ``fixed_point_scale``: when set (e.g. ``10**12``), all arithmetic
     is INTEGER fixed-point — init ``scale//N``, contributions

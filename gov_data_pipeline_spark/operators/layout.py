@@ -1,69 +1,17 @@
-"""Storage-layout operators: Z-order (Morton) clustering for
-multi-dimensional file pruning (engine extension — the lakehouse
-technique Spark itself doesn't ship).
+"""Storage-layout operators (engine extension): hash-bucketed tables
+for shuffle-free co-located joins, and small-file compaction for
+append-heavy sinks.
 
-A table range-partitioned and sorted on ONE column prunes scans
-filtered on that column, but a filter on any OTHER column touches
-every file. Interleaving the bits of two (or more) columns into a
-Morton key and range-partitioning on THAT gives every file a tight
-min/max envelope in all interleaved dimensions at once, so parquet
-footer stats prune files for filters on any of them.
-
-Fully native: the key is a codegen'd bit-interleave expression — no
-UDF, no shuffle beyond the range partitioning the write needs anyway.
-``tests/test_storage_layout.py`` verifies the pruning claim against
-actual parquet footers (pyarrow), not just plan text.
+Both are write-time layout decisions whose payoff is every later scan
+or join: ``write_bucketed`` pays the join shuffle once at ingest, and
+``compact_parquet`` restores scan health after many micro-batch
+appends. ``tests/test_storage_layout.py`` checks each against the
+physical plan or the files on disk.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-
-def zorder_key_col(a: Column, b: Column, bits: int = 16) -> Column:
-    """Morton key interleaving the low ``bits`` bits of two
-    non-negative integer columns (a in even positions, b in odd).
-
-    ``bits=16`` covers values up to 65535 per dimension — bucket or
-    quantile-rank wider domains first (the standard practice: z-order
-    ranks, not raw values, so skew doesn't collapse the curve).
-    """
-    def bit(col: Column, i: int, pos: int) -> Column:
-        return F.call_function(
-            "shiftleft",
-            F.call_function("shiftright", col.cast("long"), F.lit(i)).bitwiseAND(
-                F.lit(1)
-            ),
-            F.lit(pos),
-        )
-
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        key = key.bitwiseOR(bit(a, i, 2 * i)).bitwiseOR(bit(b, i, 2 * i + 1))
-    return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 16,
-    bits: int = 16,
-    mode: str = "error",
-) -> None:
-    """Write parquet clustered on the Morton curve of (col_a, col_b):
-    range-partition by the z-key into ``n_files`` buckets and sort
-    within partitions, so each output file covers a compact 2-D tile
-    and its footer min/max stats prune on either column."""
-    keyed = df.withColumn("__z", zorder_key_col(F.col(col_a), F.col(col_b), bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def write_bucketed(

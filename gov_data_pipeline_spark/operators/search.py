@@ -1,6 +1,7 @@
 """Keyword search / relevance scoring over a document corpus (engine
-extension — SURVEY §2.2 L8 family): TF-IDF and BM25, expressed as pure
-DataFrame aggregations so Catalyst keeps the whole pipeline JVM-side.
+extension — SURVEY §2.2 L8 family): BM25 relevance and sparse TF-IDF
+cosine similarity, expressed as pure DataFrame aggregations so Catalyst
+keeps the whole pipeline JVM-side.
 
 The reference has no search operator; a training-data pipeline needs
 one for quality filtering ("docs matching these domain keywords") and
@@ -77,37 +78,6 @@ def bm25_scores(
     )
     return scored.groupBy(id_col).agg(
         F.round(F.sum(F.col("idf") * F.col("tf_norm")), 4).alias("bm25")
-    )
-
-
-def tfidf_scores(
-    docs: DataFrame,
-    id_col: str,
-    text: Column,
-    query_terms: list[str],
-) -> DataFrame:
-    """Classic ltc-style TF-IDF sum over query terms:
-    ``(1 + ln(tf)) * ln(N / df)`` — the simpler cousin used when BM25's
-    length normalization isn't wanted."""
-    toks = _tokens(docs, id_col, text)
-    n_docs = toks.select(id_col).distinct().agg(F.count(F.lit(1)).alias("n_docs"))
-    # match _tokens' lowercasing (see bm25_scores)
-    qt = toks.filter(F.col("term").isin([t.lower() for t in query_terms]))
-    tf = qt.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(n_docs))
-        .groupBy(id_col)
-        .agg(
-            F.round(
-                F.sum(
-                    (1.0 + F.log(F.col("tf")))
-                    * F.log(F.col("n_docs") / F.col("df"))
-                ),
-                4,
-            ).alias("tfidf")
-        )
     )
 
 

@@ -701,8 +701,8 @@ ORDER BY a_id, b_id
 # hamming<=6 shares at least one identical chunk (pigeonhole), so
 # blocking has perfect recall for the verified threshold. The md5
 # token-hash makes every fingerprint bit reproducible in DuckDB — full
-# value-hash oracle. (64-bit xxhash64 stays the scale default via
-# ``simhash64_df``.)
+# value-hash oracle. (``simhash_df``'s default xxhash64 family gives
+# 64-bit fingerprints but has no DuckDB mirror.)
 # ---------------------------------------------------------------------------
 
 _SIMHASH_BITS = 56
@@ -1797,30 +1797,17 @@ def _dup3_ratio(ws):
     )
 
 
-def _grams13(ws):
-    """Distinct 13-grams (decontamination membership units)."""
-    return F.array_distinct(
-        F.when(
-            F.size(ws) >= 13,
-            F.transform(
-                F.sequence(F.lit(1), F.size(ws) - 12),
-                lambda i: F.concat_ws(" ", F.slice(ws, i, 13)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", ws)))
-    )
-
-
 def _grams13_rows(docs: DataFrame, ws) -> DataFrame:
-    """(doc_id, s) 13-gram rows WITH per-doc multiplicity, built by
-    POSITION EXPLODE + element_at — whole-stage codegen end to end
-    (r13). ``explode(_grams13(ws))`` paid an interpreted
-    transform+slice lambda per gram (HOFs are CodegenFallback):
-    measured 3.5 s vs ~0.4 s at sf0.1 for the explode alone. Same
-    grams as ``_grams13`` minus the doc-local array_distinct —
-    consumers dedup in their aggregate (count_distinct / distinct /
-    left_semi), which partial-aggregates map-side, so nothing extra
-    crosses an exchange. Docs shorter than 13 words contribute their
-    full word-join (one row), mirroring ``_grams13``."""
+    """(doc_id, s) 13-gram rows (the decontamination membership units)
+    WITH per-doc multiplicity, built by POSITION EXPLODE + element_at —
+    whole-stage codegen end to end (r13). An array form (transform +
+    slice over a position sequence, then explode) paid an interpreted
+    lambda per gram (HOFs are CodegenFallback): measured 3.5 s vs
+    ~0.4 s at sf0.1 for the explode alone. Grams are not deduplicated
+    per doc — consumers dedup in their aggregate (count_distinct /
+    distinct / left_semi), which partial-aggregates map-side, so
+    nothing extra crosses an exchange. Docs shorter than 13 words
+    contribute their full word-join (one row)."""
     return (
         docs.select("doc_id", ws.alias("__ws"))
         .select(

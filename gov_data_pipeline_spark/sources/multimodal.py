@@ -112,7 +112,7 @@ def frame_sample(
       frame from index 0 is kept. This keeps schema, batch shape and
       row-explosion semantics real and testable without a codec;
     - any other mime without PyAV raises ``NotImplementedError``
-      (clearly marked stub boundary, same contract as ``resize_media``).
+      (clearly marked stub boundary).
 
     ``idx_col`` carries the frame's index in the SOURCE stream (0,
     every_n, 2·every_n, ...), not a dense resample index.
@@ -185,83 +185,6 @@ def frame_sample(
                 yield pd.DataFrame(
                     {c: [r[c] for r in rows] for c in in_names + [idx_col, frame_col]}
                 )
-
-    return df.mapInPandas(mapper, schema=out_schema)
-
-
-def resize_media(
-    df: DataFrame,
-    media_col: str,
-    width: int,
-    height: int,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Image resize over the media struct. Output replaces (or appends,
-    when ``out_col`` is given) a media struct whose ``meta`` records the
-    target geometry.
-
-    With PIL present the payload is actually decoded, resized and
-    re-encoded; otherwise a clearly-marked deterministic fallback keeps
-    the bytes opaque and only stamps the metadata — the Spark-side
-    contract (struct schema, Arrow batching, partition behavior) is
-    identical in both modes, so pipelines built on it don't change when
-    the codec lands.
-    """
-    target = out_col or media_col
-    out_fields = [f for f in df.schema.fields if f.name != target]
-    out_schema = T.StructType(out_fields + [T.StructField(target, MEDIA_TYPE)])
-
-    def _resize_real(data: bytes) -> bytes:  # pragma: no cover
-        import io
-
-        from PIL import Image
-
-        im = Image.open(io.BytesIO(data)).resize((width, height))
-        buf = io.BytesIO()
-        im.save(buf, format="PNG")
-        return buf.getvalue()
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Probe for the codec where the code actually runs: the
-        # executor's environment, not the driver's (they can differ).
-        try:  # pragma: no cover - runtime lacks PIL; stub path tested
-            from PIL import Image  # noqa: F401
-
-            have_pil = True
-        except Exception:
-            have_pil = False
-        for pdf in batches:
-            out = []
-            for media in pdf[media_col]:
-                if media is None:
-                    out.append(None)
-                    continue
-                data = media["data"]
-                meta = dict(media["meta"] or {})
-                mime = media["mime"] or ""
-                decodable = (
-                    have_pil and data is not None and mime.startswith("image/")
-                )
-                meta.update({"width": str(width), "height": str(height)})
-                if decodable:  # pragma: no cover
-                    data = _resize_real(bytes(data))
-                    mime = "image/png"  # payload is re-encoded as PNG
-                else:
-                    # null payloads stay null; non-image mimes (and the
-                    # no-codec runtime) pass bytes through untouched
-                    meta["resize"] = "stub"
-                out.append(
-                    {
-                        "mime": media["mime"],
-                        "data": bytes(data) if data is not None else None,
-                        "meta": meta,
-                    }
-                    if not decodable
-                    else {"mime": mime, "data": data, "meta": meta}
-                )
-            cols = {f.name: pdf[f.name] for f in out_fields}
-            cols[target] = pd.Series(out, index=pdf.index, dtype="object")
-            yield pd.DataFrame(cols, index=pdf.index)
 
     return df.mapInPandas(mapper, schema=out_schema)
 

@@ -26,6 +26,15 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def checkpoint_dir(spark, tmp_path_factory) -> str:
+    """Reliable-checkpoint directory for the session, so operators can
+    run with ``reliable_checkpoint=True`` (``DataFrame.checkpoint``)."""
+    d = str(tmp_path_factory.mktemp("checkpoints"))
+    spark.sparkContext.setCheckpointDir(d)
+    return d
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
 

@@ -83,13 +83,11 @@ class TestDegenerateInputs:
         assert salted_join(one, empty.withColumnRenamed("v", "w"), ["k"]).count() == 0
 
     def test_minhash_single_doc(self, spark):
-        from gov_data_pipeline_spark.operators.dedup import (
-            minhash_from_shingle_rows,
-        )
+        from gov_data_pipeline_spark.operators.dedup import minhash_doc_profile
 
         ex = spark.createDataFrame([(1, "a b c")], "doc_id long, s string")
         for fam in ("xxhash64", "md5"):
-            sig = minhash_from_shingle_rows(ex, "doc_id", 8, hash_family=fam).collect()
+            sig = minhash_doc_profile(ex, "doc_id", 8, hash_family=fam).collect()
             assert len(sig) == 1 and len(sig[0]["sig"]) == 8
 
     def test_upsert_latest_empty_updates(self, spark):

@@ -227,48 +227,6 @@ class TestMultimodal:
         with pytest.raises(Exception, match="frame_size"):
             frame_sample(raw, "media").collect()
 
-    def test_resize_stamps_geometry_and_keeps_schema(self, spark):
-        from gov_data_pipeline_spark.sources.multimodal import (
-            pack_media_col,
-            resize_media,
-        )
-
-        df = spark.createDataFrame([(1, "hello"), (2, None)], "id long, txt string")
-        packed = df.select(
-            "id",
-            F.when(
-                F.col("txt").isNotNull(),
-                pack_media_col(F.encode("txt", "UTF-8"), "image/png"),
-            ).alias("media"),
-        )
-        out = resize_media(packed, "media", 224, 224)
-        assert out.schema["media"].dataType.fieldNames() == ["mime", "data", "meta"]
-        rows = {r["id"]: r["media"] for r in out.collect()}
-        assert rows[1]["meta"]["width"] == "224"
-        assert rows[1]["meta"]["height"] == "224"
-        assert rows[1]["mime"] == "image/png"
-        assert rows[2] is None
-        # stub mode passes payload through untouched
-        assert bytes(rows[1]["data"]) == b"hello"
-
-    def test_resize_preserves_null_payload(self, spark):
-        """A media struct with a null payload (failed fetch) must keep
-        data null — not become empty bytes that a decoder would choke
-        on."""
-        from gov_data_pipeline_spark.sources.multimodal import resize_media
-
-        df = spark.createDataFrame([(1,)], "id long").select(
-            "id",
-            F.struct(
-                F.lit("image/png").alias("mime"),
-                F.lit(None).cast("binary").alias("data"),
-                F.create_map().cast("map<string,string>").alias("meta"),
-            ).alias("media"),
-        )
-        row = resize_media(df, "media", 64, 64).collect()[0]["media"]
-        assert row["data"] is None
-        assert row["meta"]["width"] == "64"
-
 
 class TestPipelineRegistry:
     def test_process_all_isolation_and_config(self, spark):

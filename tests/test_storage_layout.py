@@ -102,77 +102,6 @@ class TestBucketedJoin:
             shutil.rmtree("spark-warehouse", ignore_errors=True)
 
 
-class TestZOrder:
-    def test_morton_key_interleaves(self, spark):
-        from gov_data_pipeline_spark.operators.layout import zorder_key_col
-        import pyspark.sql.functions as F
-
-        df = spark.createDataFrame([(0, 0), (1, 0), (0, 1), (3, 5)], "a int, b int")
-        got = {
-            (r["a"], r["b"]): r["z"]
-            for r in df.select("a", "b", zorder_key_col(F.col("a"), F.col("b")).alias("z")).collect()
-        }
-
-        def morton(a, b):
-            z = 0
-            for i in range(16):
-                z |= ((a >> i) & 1) << (2 * i)
-                z |= ((b >> i) & 1) << (2 * i + 1)
-            return z
-
-        for (a, b), z in got.items():
-            assert z == morton(a, b), (a, b)
-
-    def test_zorder_layout_prunes_both_dims(self, spark, tmp_path):
-        """Against actual parquet footers: a z-ordered layout keeps
-        tight min/max envelopes on BOTH columns, so a filter on the
-        non-sort dimension prunes most files — a single-column-sorted
-        layout cannot prune it at all."""
-        import pyarrow.parquet as pq
-        import os
-
-        from gov_data_pipeline_spark.operators.layout import write_zordered
-
-        rows = [(x, y) for x in range(0, 256, 4) for y in range(0, 256, 4)]
-        df = spark.createDataFrame(rows, "x int, y int")
-
-        z_path = str(tmp_path / "zordered")
-        lin_path = str(tmp_path / "linear")
-        write_zordered(df, z_path, "x", "y", n_files=16)
-        df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lin_path)
-
-        def files_touched(path, col, lo, hi):
-            touched = 0
-            for root, _, files in os.walk(path):
-                for f in files:
-                    if not f.endswith(".parquet"):
-                        continue
-                    md = pq.read_metadata(os.path.join(root, f))
-                    mn = min(
-                        md.row_group(i).column(
-                            md.schema.names.index(col)
-                        ).statistics.min
-                        for i in range(md.num_row_groups)
-                    )
-                    mx = max(
-                        md.row_group(i).column(
-                            md.schema.names.index(col)
-                        ).statistics.max
-                        for i in range(md.num_row_groups)
-                    )
-                    if mn <= hi and mx >= lo:
-                        touched += 1
-            return touched
-
-        # selective filter on y (the non-sorted dimension of the linear layout)
-        z_touched = files_touched(z_path, "y", 0, 31)
-        lin_touched = files_touched(lin_path, "y", 0, 31)
-        assert lin_touched == 16  # x-sorted layout cannot prune y at all
-        assert z_touched <= 8  # z-order keeps y envelopes tight
-        # and the z layout still prunes x too
-        assert files_touched(z_path, "x", 0, 31) <= 8
-
-
 def test_compact_parquet_merges_small_files(spark, tmp_path):
     """200 tiny appended files must compact to the byte-target count,
     preserve every row, and honor the within-file sort order."""

@@ -1559,11 +1559,14 @@ def test_decontaminating_sink_rejects_reserved_column(spark, tmp_path):
         )
 
 
-def test_decontaminating_ingest_sink_gates_and_quarantines(spark, tmp_path):
+def test_decontaminating_ingest_sink_gates_and_quarantines(
+    spark, tmp_path, checkpoint_dir
+):
     """Benchmark decontamination at ingest: a doc embedding an eval-set
     13-gram is quarantined WITH its matched-gram count, clean docs
     append to the corpus; stream verdicts equal the batch q87-style
-    gate on the same rows; a fresh-checkpoint replay appends nothing."""
+    gate on the same rows; a fresh-checkpoint replay appends nothing;
+    ``reliable_checkpoint=True`` gives the same outputs."""
     import os
     import time
 
@@ -1600,7 +1603,7 @@ def test_decontaminating_ingest_sink_gates_and_quarantines(spark, tmp_path):
     corpus = str(tmp_path / "corpus")
     quarantine = str(tmp_path / "quarantine")
 
-    def run(ckpt):
+    def run(ckpt, corpus=corpus, quarantine=quarantine, reliable=False):
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
@@ -1610,6 +1613,7 @@ def test_decontaminating_ingest_sink_gates_and_quarantines(spark, tmp_path):
             decontaminating_ingest_sink(
                 stream, corpus, "text", "doc_id", ckpt, bench,
                 n=13, quarantine_path=quarantine,
+                reliable_checkpoint=reliable,
             )
             .trigger(availableNow=True)
             .start()
@@ -1645,3 +1649,13 @@ def test_decontaminating_ingest_sink_gates_and_quarantines(spark, tmp_path):
     assert {
         r["doc_id"] for r in spark.read.parquet(quarantine).collect()
     } == set(quar)
+
+    # the benchmark set pinned by a reliable checkpoint: same verdicts
+    # and audit counts as the localCheckpoint pin
+    corpus_r, quarantine_r = str(tmp_path / "corpus_r"), str(tmp_path / "quar_r")
+    run(str(tmp_path / "k3"), corpus_r, quarantine_r, reliable=True)
+    assert {r["doc_id"] for r in spark.read.parquet(corpus_r).collect()} == kept
+    assert {
+        r["doc_id"]: r["n_hit_grams"]
+        for r in spark.read.parquet(quarantine_r).collect()
+    } == quar

@@ -88,7 +88,6 @@ def sparse_cosine_topk(
     k: int = 3,
     df_cap: int = 100,
     idf_scale: int = 1000,
-    cache: bool = False,
 ) -> DataFrame:
     """All-pairs sparse TF-IDF cosine, top-k neighbors per document —
     the inverted-index similarity join (dense-embedding cosine's
@@ -127,6 +126,10 @@ def sparse_cosine_topk(
       neighbor id) is deterministic everywhere, with no
       summation-order ulps anywhere in the pipeline.
 
+    The postings relation feeds both self-join sides and the norms
+    aggregate. It is not persisted, so each consumer re-evaluates it
+    from ``term_rows``.
+
     Overflow audit: w <= tf * n_docs * idf_scale; the int64 sums hold
     while sum(w^2) < 2^63 — with the df cap in place this bounds
     corpus size around n_docs * idf_scale < ~3e9 * sqrt(doc_len),
@@ -145,12 +148,6 @@ def sparse_cosine_topk(
     postings = tf.join(vocab, term_col).select(
         id_col, term_col, (F.col("tf") * F.col("idf")).alias("w")
     )
-    if cache:
-        # postings feed three consumers (both self-join sides + the
-        # norms aggregate); as with jaccard_pairs_text, recompute is
-        # cheap once codegen'd on the local harness, but when upstream
-        # ingest is expensive, persist the inverted index once.
-        postings = postings.cache()
     norms = postings.groupBy(id_col).agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
     a = postings.select(
         F.col(id_col).alias("__a"), F.col(term_col), F.col("w").alias("__wa")

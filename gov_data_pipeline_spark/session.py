@@ -51,7 +51,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         # --- planner / optimizer -------------------------------------
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE re-plan (coalesce/skew-split) underneath persisted

@@ -2,12 +2,7 @@
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, functions as F
-
-_PIN_LOCK = threading.Lock()
-_PIN_STATE: dict = {"depth": 0, "prev": None}
 
 
 def pin_partitioned(df: DataFrame, *part_cols: str) -> DataFrame:
@@ -17,15 +12,20 @@ def pin_partitioned(df: DataFrame, *part_cols: str) -> DataFrame:
     ``(k, ...)``) plans with ZERO exchanges (guide §2.4: remove
     shuffles outright).
 
-    Two facts make this work (probed on Spark 4.1, r14):
+    Two facts make this work (probed on Spark 4.1):
 
     1. ``Dataset.localCheckpoint`` captures the physical plan's output
        partitioning into the replacement ``LogicalRDD`` — but ONLY
        when the executed plan is not wrapped in
        ``AdaptiveSparkPlanExec`` (under AQE the capture degrades to
-       unknown partitioning and every consumer re-shuffles). AQE is
-       therefore disabled around the pin's construction job and
-       restored after; consumers still plan/run under AQE.
+       unknown partitioning and every consumer re-shuffles). The pin
+       is therefore built in a clone of the caller's session with AQE
+       off in the clone only, and the checkpointed plan comes back as
+       a DataFrame of the caller's session. The caller's conf never
+       changes, so consumers and concurrent queries plan under AQE.
+       The clone is taken per pin, never cached: it copies every conf
+       set at runtime up to now (``shuffle.partitions``,
+       ``nanosAsLong``), and an older clone would miss later ones.
     2. ``repartition(cols)`` with no explicit count uses the session
        ``spark.sql.shuffle.partitions`` default, so two pins built in
        the same session are co-partitioned (same expressions, same
@@ -43,31 +43,15 @@ def pin_partitioned(df: DataFrame, *part_cols: str) -> DataFrame:
 
     Correctness-neutral: partitioning never changes row content, and a
     failed capture only re-inserts exchanges (EnsureRequirements), so
-    the worst case is the old plan, never a wrong result.
-
-    Thread-safe for OVERLAPPED pins (the guide §2.6 pattern q190
-    uses): the AQE toggle is reference-counted under a lock — the
-    first concurrent pin disables AQE, the last restores it — so a
-    sibling thread's restore can never re-enable AQE under a pin that
-    is still planning (a lost capture would be a silent perf
-    regression). Assumes the engine's one-session-per-process shape."""
+    the worst case is the old plan, never a wrong result."""
     spark = df.sparkSession
     if part_cols:
         df = df.repartition(*[F.col(c) for c in part_cols])
-    with _PIN_LOCK:
-        if _PIN_STATE["depth"] == 0:
-            _PIN_STATE["prev"] = spark.conf.get("spark.sql.adaptive.enabled")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _PIN_STATE["depth"] += 1
-    try:
-        return df.localCheckpoint()
-    finally:
-        with _PIN_LOCK:
-            _PIN_STATE["depth"] -= 1
-            if _PIN_STATE["depth"] == 0:
-                spark.conf.set(
-                    "spark.sql.adaptive.enabled", _PIN_STATE["prev"]
-                )
+    ofRows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    clone = spark._jsparkSession.cloneSession()
+    clone.conf().set("spark.sql.adaptive.enabled", "false")
+    pinned = ofRows(clone, df._jdf.logicalPlan()).localCheckpoint()
+    return DataFrame(ofRows(spark._jsparkSession, pinned.logicalPlan()), spark)
 
 
 def qcol(name: str) -> Column:

@@ -280,6 +280,10 @@ class TestRound2OperatorPlans:
         assert "BroadcastHashJoin" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+        # the doc_id-keyed joins ride the pinned feature/label layout:
+        # one hash exchange is left in the final plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("Exchange hashpartitioning") == 1, final
 
     def test_q171_bigram_lm_joins_on_ngram_key(self, spark, sf_dir):
         """q171: the model join must be an equi-join on the ngram key
@@ -581,6 +585,9 @@ class TestRound2OperatorPlans:
             assert "__qv" not in m.group(1) and "__cv" not in m.group(1), (
                 m.group(1)
             )
+        # scored_all and pairs are both pinned hash(__qid): the score
+        # join, the ranking window and the counts plan exchange-free
+        assert "Exchange hashpartitioning" not in final, final
 
     def test_q88_repetition_single_map_stage(self, spark, sf_dir):
         """Per-doc repetition ratio is one projection over the scan: no
@@ -1274,3 +1281,115 @@ class TestMulticlassRoutingPlan:
         assert "BroadcastHashJoin" in final  # model-as-table join
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan  # all codegen, no Python
+
+
+class TestPins:
+    """``util.pin_partitioned`` builds its checkpoint in a clone of the
+    caller's session (AQE off in the clone only) and hands back a
+    relation whose ``LogicalRDD`` carries the hash partitioning."""
+
+    @staticmethod
+    def _pin(spark):
+        from pyspark.sql import functions as F
+
+        from gov_data_pipeline_spark.util import pin_partitioned
+
+        df = spark.range(2000).select(
+            (F.col("id") % 37).alias("k"), F.col("id").alias("v")
+        )
+        return pin_partitioned(df, "k")
+
+    def test_keyed_consumers_of_a_pin_plan_no_exchange(self, spark):
+        from pyspark.sql import functions as F
+
+        pin = self._pin(spark)
+        agg = pin.groupBy("k").agg(F.sum("v").alias("s"))
+        agg.collect()
+        assert "Exchange hashpartitioning" not in _plan(agg), _plan(agg)
+
+        a = pin.select("k", F.col("v").alias("va"))
+        b = pin.select("k", F.col("v").alias("vb"))
+        joined = a.join(b.hint("shuffle_hash"), "k")
+        sizes = [len(range(k, 2000, 37)) for k in range(37)]
+        assert joined.count() == sum(n * n for n in sizes)
+        plan = _plan(joined)
+        assert "ShuffledHashJoin" in plan, plan
+        assert "Exchange hashpartitioning" not in plan, plan
+
+    def test_pin_width_follows_runtime_shuffle_partitions(self, spark):
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "3")
+        try:
+            pin = self._pin(spark)
+            assert pin.rdd.getNumPartitions() == 3
+            parts = (
+                pin._jdf.queryExecution().analyzed().outputPartitioning()
+            ).toString()
+            assert parts.startswith("hashpartitioning(k#") and parts.endswith(
+                ", 3)"
+            ), parts
+        finally:
+            spark.conf.set(key, prev)
+
+    def test_sibling_query_plans_under_aqe_while_a_pin_builds(self, spark):
+        """A pin never switches the caller's AQE off: a sibling thread
+        that reads the conf and plans a query while the pin's job runs
+        sees ``true`` and gets an ``AdaptiveSparkPlan``. A sleeping UDF
+        in the pin's input holds its job open for ~3 s."""
+        import threading
+        import time
+
+        from pyspark.sql import functions as F
+
+        from gov_data_pipeline_spark.util import pin_partitioned
+
+        @F.udf("long")
+        def slow(x):
+            import time
+
+            time.sleep(0.75)
+            return x
+
+        src = spark.range(0, 4, numPartitions=1).select(
+            slow(F.col("id")).alias("k")
+        )
+        result = {}
+
+        def build():
+            sc.setJobGroup("pin-probe", "pin under a sibling probe")
+            result["pin"] = pin_partitioned(src, "k")
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        builder = threading.Thread(target=build)
+        builder.start()
+        deadline = time.monotonic() + 120
+        while not tracker.getJobIdsForGroup("pin-probe"):
+            assert builder.is_alive() and time.monotonic() < deadline
+            time.sleep(0.01)
+
+        seen = set()
+        sibling = spark.range(1000).groupBy((F.col("id") % 7).alias("m")).count()
+        for _ in range(20):
+            seen.add(spark.conf.get("spark.sql.adaptive.enabled"))
+        executed = sibling._jdf.queryExecution().executedPlan()
+        for _ in range(20):
+            seen.add(spark.conf.get("spark.sql.adaptive.enabled"))
+        assert builder.is_alive(), "the pin finished before the probe ran"
+        builder.join()
+
+        assert seen == {"true"}, seen
+        assert executed.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+        assert sorted(r.k for r in result["pin"].collect()) == [0, 1, 2, 3]
+        assert "Exchange hashpartitioning" not in _plan(
+            result["pin"].groupBy("k").count()
+        )
+
+    def test_q198_final_plan_keeps_one_hash_exchange(self, spark, sf_dir):
+        from gov_data_pipeline_spark.queries.quality import q198_multiclass_route
+
+        df = q198_multiclass_route(spark, sf_dir)
+        df.collect()
+        final = _plan(df).split("== Initial Plan ==")[0]
+        assert final.count("Exchange hashpartitioning") == 1, final

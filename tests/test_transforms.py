@@ -537,6 +537,38 @@ def test_examples_import_only_existing_names():
     assert checked > 0
 
 
+def test_engine_never_sets_session_aqe():
+    """No module of the package sets ``spark.sql.adaptive.enabled``
+    through a ``conf.set``/``config`` call: a session-wide AQE switch
+    leaks into every concurrent query. The one permitted site is the
+    per-pin session clone in ``util.pin_partitioned``."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "gov_data_pipeline_spark")
+    paths = sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+    assert paths
+    sites = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "config", "setConf")
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value == "spark.sql.adaptive.enabled"
+            ):
+                sites.append(
+                    (os.path.relpath(path, pkg), ast.unparse(node.func))
+                )
+    assert sites == [("util.py", "clone.conf().set")], sites
+
+
 def test_scrub_pii_masks_and_counts(spark):
     """scrub_pii_col: emails/IPv4s/phone-shaped spans become typed
     tokens; replace order (email -> ip -> phone) keeps a digit-bearing

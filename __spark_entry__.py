@@ -15,9 +15,25 @@ import os
 import sys
 from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
+
+
+def _with_root(path: str | None) -> str:
+    parts = [p for p in (path or "").split(os.pathsep) if p]
+    return os.pathsep.join(parts if _ROOT in parts else [_ROOT, *parts])
+
+
+# Python workers unpickle the package's UDFs by module name, so the
+# repo root must be on their PYTHONPATH too, not only on this process's
+# sys.path: a running context passes its ``environment`` to the workers
+# it starts, and a context started later inherits ``os.environ``.
+if (_sc := SparkContext._active_spark_context) is not None:
+    _sc.environment["PYTHONPATH"] = _with_root(_sc.environment.get("PYTHONPATH"))
+os.environ["PYTHONPATH"] = _with_root(os.environ.get("PYTHONPATH"))
 
 from gov_data_pipeline_spark.queries import all_oracles, all_queries  # noqa: E402
 

@@ -763,6 +763,26 @@ class TestCodegenBudget:
         finally:
             spark.conf.set("spark.sql.codegen.fallback", old)
 
+    def test_repeated_curation_pass_reuses_generated_classes(self, spark, sf_dir):
+        """A second pass of the curation queries compiles (almost) no
+        new classes: the session's codegen cache holds a pass's ~165
+        generated classes. With Spark's default of 100 entries the LRU
+        evicts each class before its next use and the second pass
+        recompiled ~160 of them."""
+        from gov_data_pipeline_spark.queries import all_queries
+
+        qs = all_queries()
+        names = ("q75_corpus_pipeline", "q154_decontaminate_bloom",
+                 "q155_sparse_cosine_topk", "q196_shuffled_export")
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME()
+        for name in names:
+            qs[name](spark, sf_dir).collect()
+        before = compiles.getCount()
+        for name in names:
+            qs[name](spark, sf_dir).collect()
+        assert compiles.getCount() - before <= 16
+
 
 class TestEventAnalyticsPlans:
     def test_q102_funnel_no_log_self_join(self, spark, sf_dir):

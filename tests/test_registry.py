@@ -2,7 +2,12 @@
 dicts are built by merging per-module dicts — a duplicate key would
 silently drop a query from the driver's correctness sweep."""
 
+import os
 import re
+import subprocess
+import sys
+
+import pytest
 
 from gov_data_pipeline_spark.queries import (
     _MODULES,
@@ -382,3 +387,48 @@ def test_text_queries_hold_oracle_parity_on_adversarial_unicode(
             f"{name} now matches on compatibility-class text — its "
             "documented oracle boundary has moved; update the docs"
         )
+
+
+_OUTSIDE_ROOT_CALLER = """
+import importlib.util, sys
+from pyspark.sql import SparkSession
+
+def load_entry():
+    spec = importlib.util.spec_from_file_location("__spark_entry__", sys.argv[1])
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", "512m").getOrCreate())
+
+if sys.argv[3] == "session_first":
+    spark = session()
+    e = load_entry()
+else:
+    e = load_entry()
+    spark = session()
+spark.sparkContext.setLogLevel("ERROR")
+print("ROWS", len(e.queries()["q50_llm_enrich"](spark, sys.argv[2]).collect()))
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("order", ["session_first", "entry_first"])
+def test_entry_runs_python_udfs_outside_the_repo_root(tmp_path, sf_dir, order):
+    """A caller of ``__spark_entry__`` may run from any working
+    directory with no PYTHONPATH and build its session before or after
+    the import. Python workers unpickle the package's UDFs by module
+    name, so the repo root must reach them, not only the caller's
+    ``sys.path`` (q50's enrichment stages are ``mapInPandas``)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "caller.py"
+    script.write_text(_OUTSIDE_ROOT_CALLER)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(script), os.path.join(root, "__spark_entry__.py"), sf_dir, order],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0 and "ROWS " in proc.stdout, proc.stderr[-3000:]

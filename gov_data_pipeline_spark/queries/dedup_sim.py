@@ -1797,6 +1797,13 @@ def _dup3_ratio(ws):
     )
 
 
+# The 13 element_at terms as one SQL string (one Python->JVM crossing,
+# not ~50 per plan); it names only _grams13_rows' own ``__`` columns.
+_GRAM13_SQL = "concat_ws(' ', {})".format(
+    ", ".join(f"element_at(__ws, __i + {j})" for j in range(13))
+)
+
+
 def _grams13_rows(docs: DataFrame, ws) -> DataFrame:
     """(doc_id, s) 13-gram rows (the decontamination membership units)
     WITH per-doc multiplicity, built by POSITION EXPLODE + element_at —
@@ -1824,16 +1831,7 @@ def _grams13_rows(docs: DataFrame, ws) -> DataFrame:
         )
         .select(
             "doc_id",
-            F.when(
-                F.size("__ws") >= 13,
-                F.concat_ws(
-                    " ",
-                    *[
-                        F.element_at("__ws", F.col("__i") + j)
-                        for j in range(13)
-                    ],
-                ),
-            )
+            F.when(F.size("__ws") >= 13, F.expr(_GRAM13_SQL))
             .otherwise(F.concat_ws(" ", "__ws"))
             .alias("s"),
         )

@@ -490,6 +490,37 @@ class TestReviewRegressions:
         assert set(out) == {1, 2}
         assert out[2] == [None, None, None, None]  # expression-form parity
 
+    def test_minhash_sql_signatures_match_the_per_term_form(self, spark):
+        """The one-SQL-string signatures equal one Column per hash term,
+        bit for bit, and a caller's column names are never parsed."""
+        from pyspark.sql import functions as F
+
+        from gov_data_pipeline_spark.operators.dedup import (
+            md5_h1h2,
+            minhash_doc_profile,
+            minhash_signatures_df,
+        )
+
+        ex = spark.createDataFrame(
+            [(1, "a b c"), (1, "b c d"), (2, "x y z"), (3, "é ü ß")],
+            "`doc id` long, s string",
+        )
+        h1, h2 = md5_h1h2(F.col("s"))
+        terms = {
+            "md5": [F.min(h1 + i * h2) for i in range(32)],
+            "xxhash64": [F.min(F.xxhash64(F.lit(i), F.col("s"))) for i in range(32)],
+        }
+        want = {}
+        for fam, mins in terms.items():
+            want[fam] = {
+                r[0]: r[1] for r in ex.groupBy("doc id").agg(F.array(*mins)).collect()
+            }
+            prof = minhash_doc_profile(ex, "doc id", 32, hash_family=fam)
+            assert {r["doc id"]: r["sig"] for r in prof.collect()} == want[fam]
+        arrays = ex.groupBy("doc id").agg(F.collect_list("s").alias("sh s"))
+        sigs = minhash_signatures_df(arrays, "doc id", "sh s")
+        assert {r["doc id"]: r["sig"] for r in sigs.collect()} == want["xxhash64"]
+
     def test_shingle_rows_unigrams(self, spark):
         from pyspark.sql import functions as F
 

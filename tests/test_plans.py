@@ -1413,3 +1413,51 @@ class TestPins:
         df.collect()
         final = _plan(df).split("== Initial Plan ==")[0]
         assert final.count("Exchange hashpartitioning") == 1, final
+
+
+class TestPlanBuildBudget:
+    """Building a plan costs few Python->JVM (py4j) round trips: no
+    per-call call-site capture, one SQL expression per generated
+    expression family. Counts exclude py4j's ``m`` memory commands,
+    which follow Python's GC, and other threads' commands."""
+
+    @staticmethod
+    def _round_trips(monkeypatch, build) -> int:
+        import threading
+
+        from py4j.clientserver import ClientServerConnection
+
+        send = ClientServerConnection.send_command
+        me = threading.get_ident()
+        n = [0]
+
+        def counting(self, command, *args, **kwargs):
+            if threading.get_ident() == me and not command.startswith("m\n"):
+                n[0] += 1
+            return send(self, command, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", counting)
+            build()
+        return n[0]
+
+    def test_session_turns_call_site_capture_off(self, spark):
+        assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+    def test_q155_plan(self, spark, sf_dir, monkeypatch):
+        from gov_data_pipeline_spark.queries.dedup_sim import q155_sparse_cosine_topk
+
+        # ~540 round trips; 1,233 with call-site capture on.
+        n = self._round_trips(monkeypatch, lambda: q155_sparse_cosine_topk(spark, sf_dir))
+        assert n <= 700, n
+
+    def test_minhash_profile_plan(self, spark, monkeypatch):
+        from gov_data_pipeline_spark.operators.dedup import minhash_doc_profile
+
+        ex = spark.createDataFrame([(1, "a b"), (2, "c d")], "doc_id long, s string")
+        # ~90 round trips; 2,713 with one Column per min term.
+        n = self._round_trips(
+            monkeypatch,
+            lambda: minhash_doc_profile(ex, "doc_id", 32, hash_family="md5"),
+        )
+        assert n <= 200, n

@@ -126,6 +126,13 @@ def sparse_cosine_topk(
       neighbor id) is deterministic everywhere, with no
       summation-order ulps anywhere in the pipeline.
 
+    Each unordered pair is scored once: the posting self-join keeps
+    ``a < b`` (half the ordered partial products), the dot and the
+    norm joins run on those rows, and one ``inline`` then emits both
+    orientations for the per-document rank. The dot is an exact int64
+    sum and IEEE multiplication commutes, so the mirrored score is
+    bit-identical to scoring (b, a) on its own.
+
     The postings relation feeds both self-join sides and the norms
     aggregate. It is not persisted, so each consumer re-evaluates it
     from ``term_rows``.
@@ -157,25 +164,39 @@ def sparse_cosine_topk(
     )
     dots = (
         a.join(b, term_col)
-        .where(F.col("__a") != F.col("__b"))
+        .where(F.col("__a") < F.col("__b"))
         .groupBy("__a", "__b")
         .agg(F.sum(F.col("__wa") * F.col("__wb")).alias("dot"))
     )
     na = norms.select(F.col(id_col).alias("__a"), F.col("n2").alias("__n2a"))
     nb = norms.select(F.col(id_col).alias("__b"), F.col("n2").alias("__n2b"))
-    scored = (
-        dots.join(na, "__a")
-        .join(nb, "__b")
-        .select(
-            F.col("__a").alias(id_col),
-            F.col("__b").alias("neighbor_id"),
-            (
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("__n2a").cast("double"))
-                    * F.sqrt(F.col("__n2b").cast("double"))
-                )
-            ).alias("__s"),
+    pairs = dots.join(na, "__a").join(nb, "__b").select(
+        "__a",
+        "__b",
+        (
+            F.col("dot").cast("double")
+            / (
+                F.sqrt(F.col("__n2a").cast("double"))
+                * F.sqrt(F.col("__n2b").cast("double"))
+            )
+        ).alias("__s"),
+    )
+    # Both orientations from one row, with no second scan of the pair
+    # subtree (a union would plan it twice).
+    scored = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("__a").alias(id_col),
+                    F.col("__b").alias("neighbor_id"),
+                    "__s",
+                ),
+                F.struct(
+                    F.col("__b").alias(id_col),
+                    F.col("__a").alias("neighbor_id"),
+                    "__s",
+                ),
+            )
         )
     )
     from pyspark.sql import Window as W

@@ -45,6 +45,33 @@ DEFAULT_DRIVER_MEM = os.environ.get(
 # on the builder of a new session.
 CODEGEN_CACHE_ENTRIES = 4096
 
+# Tungsten page size (spark.buffer.pageSize) in MiB. Spark derives it
+# from the execution pool, 16 MiB for a 2 GiB driver at local[4].
+# Each hash-aggregate or sort task takes at least one page, and a
+# 16 MiB page is a G1 humongous allocation (regions are 1 MiB in a
+# 2 GiB heap), so with every core busy on small stages (the AQE floor
+# below) the driver's peak RSS grew; at 1 MiB it fell below the old
+# level (SCALE.md, "Small shuffles, heavy stages"). A task holds at most
+# 8192 pages (TaskMemoryManager's page table), and a task that asks for
+# page 8193 fails rather than spills, so the size doubles until 8192
+# pages cover the driver heap: 1 MiB up to an 8 GiB driver, 2 MiB at
+# 16 GiB. A static conf: it takes effect only on the builder of a new
+# session.
+_PAGE_TABLE_SIZE = 8192
+
+
+def _mib(mem: str) -> float:
+    """A JVM memory string in MiB; a bare number is MiB, as in
+    spark.driver.memory."""
+    s = mem.strip().lower().removesuffix("b")
+    units = {"k": 2**-10, "m": 1, "g": 2**10, "t": 2**20}
+    return float(s[:-1]) * units[s[-1]] if s[-1] in units else float(s)
+
+
+PAGE_SIZE_MIB = 1
+while PAGE_SIZE_MIB * _PAGE_TABLE_SIZE < _mib(DEFAULT_DRIVER_MEM):
+    PAGE_SIZE_MIB *= 2
+
 
 def get_spark(
     app_name: str = "gov_data_pipeline_spark",
@@ -109,6 +136,12 @@ def get_spark(
             str(64 * 1024 * 1024),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        # AQE coalesces shuffle partitions down to 64 KiB, not Spark's
+        # 1 MiB: a shuffle of a few hundred KiB that feeds a CPU-heavy
+        # stage (q155's posting self-join and its score-and-rank) runs
+        # on every core instead of as one task. A runtime conf.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+        .config("spark.buffer.pageSize", f"{PAGE_SIZE_MIB}m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # --- python <-> jvm ------------------------------------------
         # No Python call-site capture. With it on, every

@@ -309,6 +309,54 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame([(1, 1), (7, 7), (7, 7)], "a_id long, b_id long")
         assert _cc_both_paths(monkeypatch, pairs) == {}
 
+    def test_driver_path_collects_the_edges_in_one_action(self, spark):
+        """Below the bound the edge set reaches the driver in one
+        bounded collect: ``dedup_clusters`` starts 5 jobs. An eager
+        checkpoint, a count and a second collect of the edges took 8."""
+        from gov_data_pipeline_spark.operators.graph import dedup_clusters
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11), (20, 21), (20, 22)], "a_id long, b_id long"
+        ).repartition(3)
+        corpus = spark.range(30).withColumnRenamed("id", "doc_id")
+        sc = spark.sparkContext
+        sc.setJobGroup("cc-driver-path", "cc-driver-path")
+        try:
+            rows = dedup_clusters(pairs, corpus, "doc_id").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("cc-driver-path")) <= 5
+        assert {r["doc_id"]: r["component"] for r in rows}[22] == 20
+
+    @pytest.mark.parametrize("reliable", [False, True])
+    def test_star_path_computes_the_pairs_once(self, spark, monkeypatch, reliable):
+        """Above the bound the star rounds start from the checkpoint that
+        the bounded collect materialized: the pair lineage runs as often
+        as on the driver path, i.e. once."""
+        from gov_data_pipeline_spark.operators import graph
+
+        evals = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def counted(x):
+            evals.add(1)
+            return x
+
+        pairs = (
+            spark.createDataFrame(
+                [(1, 2), (2, 3), (3, 4), (10, 11)], "a_id long, b_id long"
+            )
+            .repartition(3)
+            .select(counted("a_id").alias("a_id"), "b_id")
+        )
+        seen = []
+        for bound in (_DRIVER_MAX_EDGES, 0):
+            monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", bound)
+            evals.value = 0
+            graph.connected_components(pairs, reliable_checkpoint=reliable).collect()
+            seen.append(evals.value)
+        assert seen[0] > 0 and seen[1] == seen[0], seen
+
 
 class TestSearch:
     def test_bm25_rare_term_dominates(self, spark):

@@ -1461,3 +1461,75 @@ class TestPlanBuildBudget:
             lambda: minhash_doc_profile(ex, "doc_id", 32, hash_family="md5"),
         )
         assert n <= 200, n
+
+
+class TestSmallShuffles:
+    """Small shuffles that feed CPU-heavy stages run on every core: AQE
+    coalesces partitions only down to 64 KiB, Tungsten pages are small
+    enough that the extra tasks do not grow the heap, and q155 scores
+    each document pair once."""
+
+    def test_session_sets_partition_floor_and_page_size(self, spark):
+        from gov_data_pipeline_spark.session import PAGE_SIZE_MIB
+
+        floor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+        assert spark.conf.get(floor) == "64k"
+        assert spark.sparkContext.getConf().get("spark.buffer.pageSize") == (
+            f"{PAGE_SIZE_MIB}m"
+        )
+        memory = spark._jsc.sc().env().memoryManager()
+        assert memory.pageSizeBytes() == PAGE_SIZE_MIB * 2**20
+
+    def test_page_table_covers_the_execution_pool(self, spark):
+        """A task holds at most TaskMemoryManager's PAGE_TABLE_SIZE
+        pages and fails when it asks for one more, so the pages must
+        cover all the execution memory one task may be granted."""
+        tmm = spark._jvm.java.lang.Class.forName(
+            "org.apache.spark.memory.TaskMemoryManager"
+        )
+        field = tmm.getDeclaredField("PAGE_TABLE_SIZE")
+        field.setAccessible(True)
+        memory = spark._jsc.sc().env().memoryManager()
+        assert field.getInt(None) * memory.pageSizeBytes() >= memory.maxHeapMemory()
+
+    def test_q155_self_join_emits_each_pair_once(self, spark, sf_dir, duck):
+        """The posting self-join keeps a < b: half the ordered partial
+        products of the oracle's ``a.doc_id <> b.doc_id`` join, and the
+        result stays hash-equal to the oracle."""
+        from gov_data_pipeline_spark.queries.dedup_sim import (
+            _Q155_SQL,
+            q155_sparse_cosine_topk,
+        )
+        from tests.oracle import compare, run_oracle
+
+        df = q155_sparse_cosine_topk(spark, sf_dir)
+        assert compare(df.toPandas(), run_oracle(duck, _Q155_SQL))["hash_match"]
+
+        def nodes(p):
+            yield p
+            name = p.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                kids = [p.executedPlan()]
+            elif name.endswith("QueryStageExec"):
+                kids = [p.plan()]
+            else:
+                ch = p.children()
+                kids = [ch.apply(i) for i in range(ch.size())]
+            for k in kids:
+                yield from nodes(k)
+
+        self_joins = [
+            n.metrics().get("numOutputRows").get().value()
+            for n in nodes(df._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName().endswith("JoinExec")
+            and "__a" in n.simpleString(100)
+            and "[term" in n.simpleString(100)
+        ]
+        # The oracle's CTEs up to the postings relation p.
+        postings = _Q155_SQL[: _Q155_SQL.index("nrm AS")].rstrip().rstrip(",")
+        (ordered,) = duck.execute(
+            postings + "\nSELECT count(*) FROM p a JOIN p b"
+            " ON a.term = b.term AND a.doc_id <> b.doc_id"
+        ).fetchone()
+        assert len(self_joins) == 1, self_joins
+        assert 2 * self_joins[0] == ordered

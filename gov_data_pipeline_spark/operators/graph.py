@@ -96,11 +96,11 @@ def _is_stars(edges: DataFrame) -> bool:
     return bad.isEmpty()
 
 
-def _label_on_driver(edges: DataFrame, table: pa.Table) -> DataFrame:
-    """Union-find over ``table``, the collected (u, v) rows of
-    ``edges``: (node, component) as one Arrow local relation in one
-    partition, so a join against it broadcasts. Each root is the
-    minimum of its set."""
+def _label_on_driver(edges: DataFrame) -> DataFrame:
+    """Union-find over the collected (u, v) edges: (node, component)
+    as one Arrow local relation in one partition, so a join against it
+    broadcasts. Each root is the minimum of its set."""
+    table = edges.toArrow()
     parent: dict = {}
 
     def find(x):
@@ -146,16 +146,19 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # A lazy checkpoint: the one collect below materializes it, so the
-    # pair lineage runs once on either path.
+    # The local checkpoint is lazy: the count below materializes it, so
+    # the pair lineage runs once on either path. A reliable checkpoint
+    # stays eager, since a lazy one is written by a second job after the
+    # first action, which recomputes the distinct's reduce stage. The
+    # count runs on the checkpoint's rows as one job: DataFrame.count
+    # plans an aggregate, which AQE runs as two.
     edges = (
-        edges.checkpoint(eager=False)
+        edges.checkpoint()
         if reliable_checkpoint
         else edges.localCheckpoint(eager=False)
     )
-    table = edges.limit(_DRIVER_MAX_EDGES + 1).toArrow()
-    if table.num_rows <= _DRIVER_MAX_EDGES:
-        return _label_on_driver(edges, table)
+    if edges._jdf.queryExecution().toRdd().count() <= _DRIVER_MAX_EDGES:
+        return _label_on_driver(edges)
     for _ in range(_MAX_ROUNDS):
         edges = _star_round(_star_round(edges, large=True), large=False)
         # Cut lineage every round: iterative plans double otherwise and

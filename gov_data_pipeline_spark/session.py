@@ -20,6 +20,7 @@ changes master/memory):
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import SparkSession
@@ -45,19 +46,24 @@ DEFAULT_DRIVER_MEM = os.environ.get(
 # on the builder of a new session.
 CODEGEN_CACHE_ENTRIES = 4096
 
-# Tungsten page size (spark.buffer.pageSize) in MiB. Spark derives it
-# from the execution pool, 16 MiB for a 2 GiB driver at local[4].
-# Each hash-aggregate or sort task takes at least one page, and a
-# 16 MiB page is a G1 humongous allocation (regions are 1 MiB in a
+# Tungsten page size (spark.buffer.pageSize) of a local session. Spark
+# derives it from the execution pool, 16 MiB for a 2 GiB driver at
+# local[4]. Each hash-aggregate or sort task takes at least one page,
+# and a 16 MiB page is a G1 humongous allocation (regions are 1 MiB in a
 # 2 GiB heap), so with every core busy on small stages (the AQE floor
 # below) the driver's peak RSS grew; at 1 MiB it fell below the old
 # level (SCALE.md, "Small shuffles, heavy stages"). A task holds at most
 # 8192 pages (TaskMemoryManager's page table), and a task that asks for
 # page 8193 fails rather than spills, so the size doubles until 8192
-# pages cover the driver heap: 1 MiB up to an 8 GiB driver, 2 MiB at
-# 16 GiB. A static conf: it takes effect only on the builder of a new
-# session.
+# pages cover the driver heap. An on-heap page is a long[] with a
+# 16-byte header, so the page is 16 bytes short of its MiB, as Spark's
+# own derived size is under G1: the array then fills whole G1 regions
+# instead of running 16 bytes into one more. A page of half a region
+# would still take a whole one (G1 gives each humongous object its own
+# regions), so the size also doubles past half a region. A static conf:
+# it takes effect only on the builder of a new session.
 _PAGE_TABLE_SIZE = 8192
+_LONG_ARRAY_HEADER = 16
 
 
 def _mib(mem: str) -> float:
@@ -68,9 +74,19 @@ def _mib(mem: str) -> float:
     return float(s[:-1]) * units[s[-1]] if s[-1] in units else float(s)
 
 
-PAGE_SIZE_MIB = 1
-while PAGE_SIZE_MIB * _PAGE_TABLE_SIZE < _mib(DEFAULT_DRIVER_MEM):
-    PAGE_SIZE_MIB *= 2
+def page_size_bytes(driver_mem: str) -> int:
+    """spark.buffer.pageSize for a local session whose driver has
+    ``driver_mem`` of heap, 16 bytes short of 1 MiB up to a 2 GiB
+    driver, of 2 MiB up to 4 GiB (2 MiB regions), of 1 MiB up to 8 GiB
+    and of 2 MiB up to 16 GiB."""
+    heap = _mib(driver_mem)
+    # HotSpot's G1 region: the heap over 2048, rounded up to a power
+    # of two, within 1-32 MiB.
+    region = min(32, 2 ** max(0, math.ceil(math.log2(heap / 2048))))
+    mib = 1
+    while mib * _PAGE_TABLE_SIZE < heap or 2 * mib == region:
+        mib *= 2
+    return mib * 2**20 - _LONG_ARRAY_HEADER
 
 
 def get_spark(
@@ -141,7 +157,6 @@ def get_spark(
         # stage (q155's posting self-join and its score-and-rank) runs
         # on every core instead of as one task. A runtime conf.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.buffer.pageSize", f"{PAGE_SIZE_MIB}m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # --- python <-> jvm ------------------------------------------
         # No Python call-site capture. With it on, every
@@ -167,6 +182,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", DEFAULT_DRIVER_MEM)
     )
+    if not master or master.split("[")[0] == "local":
+        # The driver is the only executor, so its heap sizes the page
+        # exactly. A cluster keeps Spark's per-executor derived size.
+        builder = builder.config(
+            "spark.buffer.pageSize", str(page_size_bytes(DEFAULT_DRIVER_MEM))
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -309,10 +309,11 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame([(1, 1), (7, 7), (7, 7)], "a_id long, b_id long")
         assert _cc_both_paths(monkeypatch, pairs) == {}
 
-    def test_driver_path_collects_the_edges_in_one_action(self, spark):
-        """Below the bound the edge set reaches the driver in one
-        bounded collect: ``dedup_clusters`` starts 5 jobs. An eager
-        checkpoint, a count and a second collect of the edges took 8."""
+    def test_driver_path_counts_on_the_lazy_checkpoint(self, spark):
+        """Below the bound one job counts the edges and materializes
+        their lazy checkpoint, and one collect reads it back:
+        ``dedup_clusters`` starts 6 jobs. An eager checkpoint, an
+        aggregate count (two jobs under AQE) and the collect took 8."""
         from gov_data_pipeline_spark.operators.graph import dedup_clusters
 
         pairs = spark.createDataFrame(
@@ -325,14 +326,16 @@ class TestConnectedComponents:
             rows = dedup_clusters(pairs, corpus, "doc_id").collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup("cc-driver-path")) <= 5
+        assert len(sc.statusTracker().getJobIdsForGroup("cc-driver-path")) <= 6
         assert {r["doc_id"]: r["component"] for r in rows}[22] == 20
 
     @pytest.mark.parametrize("reliable", [False, True])
     def test_star_path_computes_the_pairs_once(self, spark, monkeypatch, reliable):
         """Above the bound the star rounds start from the checkpoint that
-        the bounded collect materialized: the pair lineage runs as often
-        as on the driver path, i.e. once."""
+        the count materialized: the pairs are evaluated as often as on
+        the driver path, i.e. once. The counter sits before the
+        distinct's shuffle, so it sees a second plan of the pairs, not
+        a rerun of the stage after that shuffle."""
         from gov_data_pipeline_spark.operators import graph
 
         evals = spark.sparkContext.accumulator(0)

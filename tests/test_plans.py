@@ -1470,15 +1470,35 @@ class TestSmallShuffles:
     each document pair once."""
 
     def test_session_sets_partition_floor_and_page_size(self, spark):
-        from gov_data_pipeline_spark.session import PAGE_SIZE_MIB
+        from gov_data_pipeline_spark.session import page_size_bytes
 
         floor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
         assert spark.conf.get(floor) == "64k"
-        assert spark.sparkContext.getConf().get("spark.buffer.pageSize") == (
-            f"{PAGE_SIZE_MIB}m"
-        )
+        conf = spark.sparkContext.getConf()
+        page = page_size_bytes(conf.get("spark.driver.memory"))
+        assert conf.get("spark.buffer.pageSize") == str(page)
         memory = spark._jsc.sc().env().memoryManager()
-        assert memory.pageSizeBytes() == PAGE_SIZE_MIB * 2**20
+        assert memory.pageSizeBytes() == page
+        # 16 bytes short of a power of two, for the long[] header.
+        assert (page + 16) & (page + 15) == 0
+
+    def test_pages_fill_whole_g1_regions(self, spark):
+        """An on-heap page is a long[] with a 16-byte header. Under G1
+        it must either fill whole regions or stay below half a region;
+        a humongous object takes whole regions, so a page of 1 MiB plus
+        its header would hold two 1 MiB regions, and a page of half a
+        region would hold a whole one."""
+        import pytest
+
+        jvm = spark._jvm
+        mx = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+        )
+        if mx.getVMOption("UseG1GC").getValue() != "true":
+            pytest.skip("the driver does not run G1")
+        region = int(mx.getVMOption("G1HeapRegionSize").getValue())
+        array = spark._jsc.sc().env().memoryManager().pageSizeBytes() + 16
+        assert array % region == 0 or 2 * array < region, (array, region)
 
     def test_page_table_covers_the_execution_pool(self, spark):
         """A task holds at most TaskMemoryManager's PAGE_TABLE_SIZE
